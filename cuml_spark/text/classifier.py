@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pandas as pd
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -108,9 +110,14 @@ def score_linear_bow(
         if not 0 <= int(b) < num_buckets:
             raise ValueError(
                 f"weight bucket {b} outside [0, {num_buckets})")
-    spark = df.sparkSession
-    wdf = spark.createDataFrame(
-        [(int(b), float(w)) for b, w in sorted(weights.items())],
+    # a pandas frame ships Arrow-batched where a list of tuples is
+    # converted row by row; the explicit schema types an empty table too
+    ordered = sorted(weights.items())
+    wdf = df.sparkSession.createDataFrame(
+        pd.DataFrame({
+            "bucket": pd.Series([int(b) for b, _ in ordered], dtype="int64"),
+            "__w": pd.Series([float(w) for _, w in ordered], dtype="float64"),
+        }),
         "bucket long, __w double",
     )
     counts = hashed_token_counts(

@@ -27,8 +27,10 @@ Spark shapes (100 TB):
   ≤ ``num_buckets`` rows BY CONSTRUCTION, so the collected model is
   bounded by the caller's bucket choice, never by corpus size (the
   ``fit_bigram_lm`` driver-OOM lesson, applied by design rather than by
-  cap).  Two fits (target + raw) = two corpus scans; the target corpus
-  is small by problem statement.
+  cap), collected with Arrow.  :func:`fit_dsir` counts the target and
+  raw corpora in ONE aggregation over their union, one ``count_if`` per
+  side (the :func:`hashed_bucket_totals_pair` shape): each corpus is
+  scanned once and the pair pays a single shuffle and collect.
 * **weights** (:meth:`DSIRModel.log_weights`): the per-bucket log-ratio
   table is tiny (≤ num_buckets rows) and broadcast-joined against the
   hashed counts — exactly the :func:`~cuml_spark.text.classifier.
@@ -46,6 +48,8 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
+
+import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -66,6 +70,37 @@ __all__ = [
 ]
 
 
+def _bucket_count_table(
+    df: DataFrame,
+    num_buckets: int,
+    text_col: str,
+    token_sep: str,
+    **counts,
+) -> pd.DataFrame:
+    """One explode + ONE bucket-keyed aggregation of ``counts`` (name →
+    aggregate over each token's ``bucket`` and the other columns of its
+    row in ``df``), collected with Arrow: ≤ ``num_buckets`` rows."""
+    if num_buckets < 1:
+        raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
+    carried = [c for c in df.columns if c != text_col]
+    return (
+        df.select(F.explode(_token_array(text_col, token_sep)).alias("__tok"),
+                  *carried)
+        .select(token_bucket(F.col("__tok"), num_buckets).alias("bucket"),
+                *carried)
+        .groupBy("bucket")
+        .agg(*[agg.alias(name) for name, agg in counts.items()])
+        .toPandas()
+    )
+
+
+def _nonzero_counts(table: pd.DataFrame, col: str) -> dict[int, int]:
+    """``{bucket: count}`` of the buckets where ``col`` is nonzero, as
+    plain Python ints."""
+    hit = table[table[col] > 0]
+    return dict(zip(hit["bucket"].tolist(), hit[col].tolist()))
+
+
 def hashed_bucket_totals(
     df: DataFrame,
     num_buckets: int,
@@ -76,16 +111,10 @@ def hashed_bucket_totals(
     """Corpus token totals per md5 bucket: ``{bucket: count}`` with only
     nonzero buckets present.  Bounded at ≤ ``num_buckets`` rows before
     the collect — the driver never holds corpus-scale state."""
-    if num_buckets < 1:
-        raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
-    rows = (
-        df.select(F.explode(_token_array(text_col, token_sep)).alias("__tok"))
-        .select(token_bucket(F.col("__tok"), num_buckets).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    )
-    return {int(r["bucket"]): int(r["cnt"]) for r in rows}
+    table = _bucket_count_table(
+        df.select(text_col), num_buckets, text_col, token_sep,
+        cnt=F.count("*"))
+    return _nonzero_counts(table, "cnt")
 
 
 def hashed_bucket_totals_pair(
@@ -102,21 +131,11 @@ def hashed_bucket_totals_pair(
     one bucket-keyed aggregation computing ``count(*)`` and the
     predicate-conditional count side by side — half the scan cost of two
     :func:`hashed_bucket_totals` passes at 100 TB."""
-    if num_buckets < 1:
-        raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
-    rows = (
-        df.select(F.explode(_token_array(text_col, token_sep)).alias("__tok"),
-                  target_pred.alias("__is_target"))
-        .select(token_bucket(F.col("__tok"), num_buckets).alias("bucket"),
-                "__is_target")
-        .groupBy("bucket")
-        .agg(F.count("*").alias("rc"),
-             F.count_if(F.col("__is_target")).alias("tc"))
-        .collect()
-    )
-    tc = {int(r["bucket"]): int(r["tc"]) for r in rows if r["tc"]}
-    rc = {int(r["bucket"]): int(r["rc"]) for r in rows}
-    return tc, rc
+    table = _bucket_count_table(
+        df.select(text_col, target_pred.alias("__is_target")),
+        num_buckets, text_col, token_sep,
+        rc=F.count("*"), tc=F.count_if(F.col("__is_target")))
+    return _nonzero_counts(table, "tc"), _nonzero_counts(table, "rc")
 
 
 def fit_dsir_subset(
@@ -244,11 +263,17 @@ def fit_dsir(
     smoothing: float = 1.0,
 ) -> DSIRModel:
     """Fit hashed-unigram distributions on the target and raw corpora
-    and return the log-ratio model.  Two bounded aggregation passes."""
-    tc = hashed_bucket_totals(
-        target, num_buckets, text_col=text_col, token_sep=token_sep)
-    rc = hashed_bucket_totals(
-        raw, num_buckets, text_col=text_col, token_sep=token_sep)
+    and return the log-ratio model.  ONE bounded aggregation over the
+    union of the two corpora, counting each side with its own
+    ``count_if``: the same totals as two :func:`hashed_bucket_totals`
+    calls, for one shuffle and one collect."""
+    both = target.select(text_col, F.lit(True).alias("__is_target")).unionByName(
+        raw.select(text_col, F.lit(False).alias("__is_target")))
+    table = _bucket_count_table(
+        both, num_buckets, text_col, token_sep,
+        tc=F.count_if(F.col("__is_target")),
+        rc=F.count_if(~F.col("__is_target")))
+    tc, rc = _nonzero_counts(table, "tc"), _nonzero_counts(table, "rc")
     return DSIRModel(
         log_ratios=dsir_log_ratios(tc, rc, num_buckets,
                                    smoothing=smoothing),

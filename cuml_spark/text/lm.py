@@ -23,9 +23,12 @@ Spark-first details (100 TB):
 * tokenization and bigram construction are IN-ROW (``split`` +
   ``zip_with`` over two array slices) — the corpus text never leaves its
   scan;
-* model fitting is two keyed aggregations: bigram counts (one shuffle on
-  the (w1, w2) key, map-side combined) and context counts derived by
-  re-aggregating the already-collapsed bigram table (tiny);
+* model fitting is ONE keyed aggregation over ONE corpus pass: every
+  token position becomes a (w1, w2) pair (the document's last token
+  pairs with null), counted in one map-side-combined shuffle on the
+  pair key and collected once with Arrow; bigram counts, context
+  counts and the vocabulary all derive from that one table on the
+  driver;
 * smoothing is add-k over the corpus vocabulary, so every probability is
   a ratio of integers — deterministic and engine-portable (the DuckDB
   oracle reproduces scores to the rounding precision).
@@ -115,6 +118,38 @@ def _bigram_rows(
 DEFAULT_MAX_BIGRAMS = 1_000_000
 
 
+def _position_pair_counts(
+    frame: DataFrame, text_col: str, token_sep: str
+) -> DataFrame:
+    """(__w1, __w2, __c): one map-side-combined count per distinct pair
+    of adjacent tokens, plus one (w1, null) count per distinct
+    document-final token — every token position appears as a ``w1``, so
+    the table alone yields bigram counts, context counts and V."""
+    toks = _token_array(text_col, token_sep).alias("__t")
+    n = F.size("__t")
+    # zip_with pads the one-shorter successor slice with null, pairing
+    # each document's last token with null; the slice length is clamped
+    # to >= 1 because size() of a null array is null or -1
+    pairs = F.zip_with(
+        "__t",
+        F.slice("__t", 2, F.greatest(n, F.lit(1))),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    )
+    return (
+        frame.select(toks)
+        .select(F.explode(pairs).alias("__p"))
+        .groupBy(F.col("__p.w1").alias("__w1"), F.col("__p.w2").alias("__w2"))
+        .agg(F.count("*").alias("__c"))
+    )
+
+
+def _release_checkpoint(frame: DataFrame) -> None:
+    """Drop a ``localCheckpoint``'s blocks now instead of when the driver
+    garbage-collects the frame: a checkpointed frame's analyzed plan is
+    the ``LogicalRDD`` over the checkpointed RDD."""
+    frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def fit_bigram_lm(
     corpus: DataFrame,
     text_col: str = "text",
@@ -126,13 +161,39 @@ def fit_bigram_lm(
 ) -> BigramLM:
     """Fit a :class:`BigramLM` on ``corpus`` and collect it to the driver.
 
-    One map-side-combined shuffle on the (w1, w2) key; context counts and
-    vocabulary re-aggregate the collapsed tables.  ``max_bigrams``
-    (default ``DEFAULT_MAX_BIGRAMS`` = 1e6) keeps only the most frequent
-    bigrams (ties broken by key, deterministic) so the driver-side model
-    stays bounded no matter the corpus — a web-scale corpus has billions
-    of distinct bigrams, and an uncapped ``.collect()`` of them is a
-    driver OOM, the failure mode ``semantic_prune``'s
+    ONE corpus pass: every token position is paired with its successor
+    (null for a document's last token) and counted in one
+    map-side-combined shuffle on the (w1, w2) key.  The table is then
+    collected with Arrow under a ``limit(max_bigrams + 1)`` probe — the
+    ``near_dup_groups`` ``driver_cap + 1`` pattern — so the driver never
+    holds more than ``max_bigrams + 1`` rows of it.  The probe caps ROWS
+    of that position-pair table: its bigram rows plus one (w1, null) row
+    per distinct document-final token, so a corpus with at most
+    ``max_bigrams`` distinct bigrams can still overflow it (the model is
+    the same either way; only the path differs).  When the probe comes
+    back complete (the common case), bigram counts, context counts
+    (per-w1 sums of the bigram rows) and V (distinct w1) derive from it
+    on the driver: two Spark jobs, one scan.  When it overflows, the
+    capped model is read from the SAME aggregated table: the top
+    ``max_bigrams`` bigrams (count desc, then w1, w2 — deterministic) and
+    the exact context counts and V, each one small query over it.  In
+    neither case is the corpus scanned twice.
+
+    The aggregated table is a ``localCheckpoint`` that the probe job
+    fills as it runs (the aggregation stays parallel: the limit applies
+    per partition first, then to at most partitions × (cap + 1) rows in
+    one task).  Its blocks sit in executor storage (memory, spilling to
+    local disk) only for the duration of the fit and are released before
+    it returns.  ``localCheckpoint`` trades lineage for that single pass:
+    an executor lost between the probe and the capped queries fails the
+    fit (Spark's documented contract), which a retry of the fit handles.
+    A ``persist`` would keep lineage but costs a third Spark job on every
+    fit, the cache-materialization query stage.
+
+    ``max_bigrams`` (default ``DEFAULT_MAX_BIGRAMS`` = 1e6) keeps the
+    driver-side model bounded no matter the corpus — a web-scale corpus
+    has billions of distinct bigrams, and an uncapped ``.collect()`` of
+    them is a driver OOM, the failure mode ``semantic_prune``'s
     ``max_cluster_rows`` guard exists to refuse.  When the corpus has
     fewer distinct bigrams than the cap the fitted model is identical to
     an uncapped fit.  Context counts and V remain exact under any cap, so
@@ -143,39 +204,51 @@ def fit_bigram_lm(
     Context counts are NOT capped (one entry per distinct token): a
     corpus whose VOCABULARY alone overwhelms the driver needs a real
     pretrained LM (KenLM et al.), not a count model fit in-session.
+    ``id_col`` is accepted for signature compatibility; the fit never
+    reads it.
     """
     if add_k <= 0:
         raise ValueError(f"add_k must be > 0, got {add_k}")
-    pairs = _bigram_rows(corpus, text_col, id_col, token_sep)
-    # persist the collapsed counts: three driver actions follow (bigram
-    # collect, context collect, vocabulary scan), and without it both
-    # count collects re-pay the corpus-scale exploded-bigram shuffle
-    bgc = pairs.groupBy("__w1", "__w2").agg(F.count("*").alias("__c"))
-    bgc = bgc.persist()
+    if max_bigrams is not None and max_bigrams < 0:
+        raise ValueError(f"max_bigrams must be >= 0 or None, got {max_bigrams}")
+    counts = _position_pair_counts(corpus, text_col, token_sep)
+    if max_bigrams is not None:
+        # the probe job fills the checkpoint, so an overflowing probe
+        # reads the capped model from the table instead of the corpus
+        counts = counts.localCheckpoint(eager=False)
     try:
-        ctx = bgc.groupBy("__w1").agg(F.sum("__c").alias("__cw"))
-        vocab = (
-            corpus.select(
-                F.explode(_token_array(text_col, token_sep)).alias("__w")
+        probe = counts if max_bigrams is None else counts.limit(
+            int(max_bigrams) + 1)
+        table = probe.toPandas()
+        if max_bigrams is None or len(table) <= max_bigrams:
+            vocab_size = table["__w1"].nunique()
+            bigrams = table[table["__w2"].notna()]
+            ctx = bigrams.groupby("__w1", sort=False)["__c"].sum()
+        else:
+            has_w2 = F.col("__w2").isNotNull()
+            bigrams = (
+                counts.where(has_w2)
+                .orderBy(F.col("__c").desc(), "__w1", "__w2")
+                .limit(int(max_bigrams))
+                .toPandas()
             )
-            .agg(F.countDistinct("__w"))
-            .collect()[0][0]
-        ) or 0
-        take = bgc
-        if max_bigrams is not None:
-            take = bgc.orderBy(
-                F.col("__c").desc(), "__w1", "__w2"
-            ).limit(int(max_bigrams))
-        bigram_counts = {
-            (r["__w1"], r["__w2"]): r["__c"] for r in take.collect()
-        }
-        context_counts = {r["__w1"]: r["__cw"] for r in ctx.collect()}
+            per_w1 = (
+                counts.groupBy("__w1")
+                .agg(F.sum(F.when(has_w2, F.col("__c"))).alias("__cw"))
+                .toPandas()
+            )
+            vocab_size = len(per_w1)
+            ctx = per_w1.dropna().set_index("__w1")["__cw"].astype("int64")
     finally:
-        bgc.unpersist()
+        if max_bigrams is not None:
+            _release_checkpoint(counts)
+    # tolist() unboxes numpy scalars: keys and counts stay plain str/int
     return BigramLM(
-        bigram_counts=bigram_counts,
-        context_counts=context_counts,
-        vocab_size=int(vocab),
+        bigram_counts=dict(zip(
+            zip(bigrams["__w1"].tolist(), bigrams["__w2"].tolist()),
+            bigrams["__c"].tolist())),
+        context_counts=dict(zip(ctx.index.tolist(), ctx.tolist())),
+        vocab_size=int(vocab_size),
         add_k=float(add_k),
         token_sep=token_sep,
     )

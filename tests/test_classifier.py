@@ -92,6 +92,39 @@ def test_score_linear_bow_hand_scores(spark):
         score_linear_bow(df, {b + 1: 1.0}, num_buckets=b)
 
 
+def test_score_linear_bow_same_scores_with_arrow_on_and_off(spark):
+    """The weight table is built from a pandas frame: Arrow-batched when
+    the session enables Arrow, row-converted when it does not — the
+    scores must be identical either way, and an empty weight table
+    (typed by the explicit schema) must still score every row."""
+    b = 64
+    w = {i: (i - 31) / 8.0 for i in range(0, b, 3)}
+    df = spark.createDataFrame(
+        [(0, "fast fast slow"), (1, "other words here"), (2, None), (3, "")],
+        "doc_id long, text string")
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    saved = spark.conf.get(key)
+    got = {}
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            got[arrow] = [
+                sorted(tuple(r) for r in score_linear_bow(
+                    df, weights, bias=0.5, num_buckets=b,
+                    default_weight=dflt).collect())
+                for weights, dflt in ((w, 0.0), (w, -0.25), ({}, 0.0),
+                                      ({}, 0.75))]
+    finally:
+        spark.conf.set(key, saved)
+    assert got["true"] == got["false"]
+    plain, _, empty, empty_dflt = got["true"]
+    assert plain != empty
+    assert [r[1] for r in empty] == [0.5] * 4
+    n_tokens = [3, 3, 0, 0]
+    for (doc, score, _), n in zip(empty_dflt, n_tokens):
+        assert score == 0.5 + 0.75 * n
+
+
 def test_score_linear_bow_inline_matches_relational(spark):
     """The map-only inline scorer must equal the broadcast-join path
     bit-for-bit with dyadic weights — including bias-only rows (null,

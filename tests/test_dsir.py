@@ -15,6 +15,7 @@ from cuml_spark.text import (
     dsir_log_ratios,
     dsir_select_gumbel,
     dsir_select_topk,
+    dsir_unseen_log_ratio,
     fit_dsir,
     hashed_bucket_totals,
 )
@@ -140,6 +141,26 @@ def test_subset_fit_matches_two_pass_fit(spark):
     tc, rc = hashed_bucket_totals_pair(df, F.col("lang") == "fr", B)
     assert tc == hashed_bucket_totals(df.filter(F.col("lang") == "fr"), B)
     assert rc == hashed_bucket_totals(df, B)
+
+
+def test_union_fit_matches_two_bucket_total_passes(spark):
+    """fit_dsir's one aggregation over the target ∪ raw union must give
+    the model two separate hashed_bucket_totals passes give — also for a
+    target with no tokens at all (every target count zero)."""
+    rows = [(0, "a b a"), (1, "b c"), (2, None), (3, "c c d é"), (4, "")]
+    raw = spark.createDataFrame(rows, "doc_id long, text string")
+    B = 64
+    for target in (raw.where("doc_id < 2"), raw.where("doc_id in (2, 4)"),
+                   raw):
+        tc = hashed_bucket_totals(target, B)
+        rc = hashed_bucket_totals(raw, B)
+        model = fit_dsir(target, raw, num_buckets=B)
+        assert model.log_ratios == dsir_log_ratios(tc, rc, B)
+        assert model.default_log_ratio == dsir_unseen_log_ratio(tc, rc, B)
+        assert all(type(b) is int for b in model.log_ratios)
+    assert tc and all(type(v) is int for v in tc.values())
+    with pytest.raises(ValueError, match="num_buckets"):
+        fit_dsir(raw, raw, num_buckets=0)
 
 
 def test_inline_weights_match_join_path(spark):

@@ -176,10 +176,14 @@ def test_right_size_coalesces_small_and_passes_large(spark):
     partitions (the per-task overhead fix for iterative JVM fits) while
     returning large-estimate frames untouched — the property that makes it
     a no-op on a 100 TB input."""
+    from conftest import SF_UNIT
+
     from cuml_spark.core.session import ensure_parallelism, right_size
 
+    # an explicit partition count above right_size's floor: the session
+    # default alone can already equal the floor (4 cores)
     small = ensure_parallelism(
-        spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
+        spark.read.parquet(f"{SF_UNIT}/lineitem.parquet"), min_parts=32
     )
     before = small.rdd.getNumPartitions()
     after = right_size(small).rdd.getNumPartitions()

@@ -636,6 +636,83 @@ def test_bigram_lm_fit_bounded_by_default(spark):
     assert capped.vocab_size == uncapped.vocab_size  # V never capped
 
 
+def _reference_lm(texts, sep=" "):
+    """Pure-Python bigram counts, context counts and V over ``texts``."""
+    bigrams, contexts, vocab = {}, {}, set()
+    for text in texts:
+        toks = [t for t in (text or "").split(sep) if t]
+        vocab.update(toks)
+        for w1, w2 in zip(toks, toks[1:]):
+            bigrams[(w1, w2)] = bigrams.get((w1, w2), 0) + 1
+            contexts[w1] = contexts.get(w1, 0) + 1
+    return bigrams, contexts, len(vocab)
+
+
+def test_bigram_lm_one_pass_fit_edge_cases(spark):
+    """The one-pass fit equals a pure-Python reference on degenerate
+    documents (null, empty, separator-only, single-token, one repeated
+    token) and non-ASCII tokens — uncapped, and under a cap whose cut
+    falls inside a tie (count desc, then w1, w2 in UTF-8 byte order,
+    Spark's string order).  Context counts and V stay exact under the
+    cap; the model holds plain str/int, pickles, and scores like a
+    model built from the reference tables."""
+    import pickle
+
+    from cuml_spark.text import BigramLM, bigram_lm_scores, fit_bigram_lm
+
+    rows = [(0, None), (1, ""), (2, "   "), (3, "solo"),
+            (4, "rep rep rep rep"), (5, "é b é b"), (6, "a b a b"),
+            (7, "日本 a"), (8, "ü a"), (9, "b é"), (10, "z"),
+            (11, "a ü a")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    bigrams, contexts, vocab = _reference_lm(t for _, t in rows)
+
+    def scores(model):
+        return {r["doc_id"]: (r["n_bigrams"], r["avg_logp"])
+                for r in bigram_lm_scores(df, model=model).collect()}
+
+    model = fit_bigram_lm(df)
+    assert model.bigram_counts == bigrams
+    assert model.context_counts == contexts
+    assert model.vocab_size == vocab == 8
+    for (w1, w2), c in model.bigram_counts.items():
+        assert type(w1) is str and type(w2) is str and type(c) is int
+    for w1, c in model.context_counts.items():
+        assert type(w1) is str and type(c) is int
+    assert type(model.vocab_size) is int
+    clone = pickle.loads(pickle.dumps(model))
+    assert clone == model and repr(clone) == repr(model)
+    ref_model = BigramLM(bigram_counts=bigrams, context_counts=contexts,
+                         vocab_size=vocab)
+    assert scores(model) == scores(ref_model)
+
+    order = sorted(bigrams, key=lambda k: (-bigrams[k], k[0].encode(),
+                                           k[1].encode()))
+    cap = 4  # the cut splits the count-2 tie between ('é','b') and ('ü','a')
+    assert bigrams[order[cap - 1]] == bigrams[order[cap]]
+    assert order[cap - 1] == ("é", "b") and order[cap] == ("ü", "a")
+    capped = fit_bigram_lm(df, max_bigrams=cap)
+    assert capped.bigram_counts == {k: bigrams[k] for k in order[:cap]}
+    assert capped.context_counts == contexts
+    assert capped.vocab_size == vocab
+    assert all(type(c) is int for c in capped.context_counts.values())
+    assert pickle.loads(pickle.dumps(capped)) == capped
+    assert scores(capped) == scores(BigramLM(
+        bigram_counts={k: bigrams[k] for k in order[:cap]},
+        context_counts=contexts, vocab_size=vocab))
+    # a cap at or above the distinct-bigram count is the uncapped model;
+    # here through the overflow path, since the probe also counts one
+    # (w1, null) row per distinct document-final token
+    assert fit_bigram_lm(df, max_bigrams=len(bigrams)) == model
+    assert fit_bigram_lm(df, max_bigrams=0).bigram_counts == {}
+    with pytest.raises(ValueError, match="max_bigrams"):
+        fit_bigram_lm(df, max_bigrams=-1)
+    # an empty corpus fits the degenerate model
+    empty = fit_bigram_lm(df.where("doc_id < 0"))
+    assert (empty.bigram_counts, empty.context_counts,
+            empty.vocab_size) == ({}, {}, 0)
+
+
 def test_bigram_lm_model_handles_sep_in_token_denominators(spark):
     """Regression (r7 ADVICE): with a non-space token_sep, tokens may
     contain spaces; P(w2|w1) denominators must group by the TRUE w1."""
