@@ -156,7 +156,8 @@ def _fit_line(total: float, timings: dict[str, float], sf) -> str:
     """Compact JSON line <= _PRINT_BUDGET chars: all queries if they fit,
     else the pinned comparison set first (then the most expensive of the
     rest), dropping from the cheap unpinned end until it fits, with
-    `queries_omitted`/`n_queries` recording what was cut."""
+    `queries_omitted`/`n_queries` recording what was cut.  A pinned query
+    cut to fit is named in a warning on stderr; stdout is unchanged."""
 
     def build(q: dict[str, float], omitted: int) -> str:
         body = {
@@ -184,13 +185,24 @@ def _fit_line(total: float, timings: dict[str, float], sf) -> str:
                     key=lambda k: -q2[k])
     order_pref = pinned + extras
     keep = dict.fromkeys(order_pref)
+
+    def warn_dropped_pinned() -> None:
+        dropped = [k for k in pinned if k not in keep]
+        if dropped:
+            print(f"bench.py: print budget dropped {len(dropped)} pinned "
+                  f"queries (timings in bench_results.json): {', '.join(dropped)}",
+                  file=sys.stderr)
+
     while len(keep) > 1:
         dropped = next(reversed(keep))
         del keep[dropped]
         q = {k: q2[k] for k in timings if k in keep}  # registry order
         line = build(q, len(timings) - len(keep))
         if len(line) <= _PRINT_BUDGET:
+            warn_dropped_pinned()
             return line
+    keep.clear()
+    warn_dropped_pinned()
     return build({}, len(timings))
 
 

@@ -22,10 +22,11 @@ import weakref
 import numpy as np
 from pyspark.ml.clustering import KMeans as MLKMeans
 from pyspark.ml.feature import VectorAssembler
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cuml_spark.core.base import Base
+from cuml_spark.core.exprs import sql_double, sql_double_col, sql_ident
 from cuml_spark.core.validation import check_features
 
 
@@ -67,9 +68,9 @@ class KMeans(Base):
         return VectorAssembler(inputCols=cols, outputCol="__features").transform(casted)
 
     def fit(self, df: DataFrame, feature_cols: list[str]) -> "KMeans":
-        check_features(df, feature_cols)  # dtype validation only
+        data = check_features(df, feature_cols)
         if self.init_centers is not None:
-            return self._fit_lloyd(df, feature_cols)
+            return self._fit_lloyd(data, feature_cols)
         init_mode = "k-means||" if "k-means" in self.init else "random"
         km = MLKMeans(
             k=self.n_clusters, maxIter=self.max_iter, tol=self.tol,
@@ -89,24 +90,25 @@ class KMeans(Base):
         self._cols = list(feature_cols)
         return self
 
-    def _fit_lloyd(self, df: DataFrame, feature_cols: list[str]) -> "KMeans":
+    def _fit_lloyd(self, data: DataFrame, feature_cols: list[str]) -> "KMeans":
         """Lloyd EM from explicit init centers (kmeans.pyx:114 ndarray init;
-        sg_impl.cuh:41 EM loop).  Each iteration is ONE map-side-combined
-        groupBy over broadcast centers — per-iteration driver state is the
-        (k, d) centroid matrix only, so the loop scales to any row count.
-        Assignment ties break to the lowest cluster id (strict `<`),
-        matching ``predict``.
+        sg_impl.cuh:41 EM loop) over the double-cast feature frame.  Each
+        iteration is ONE map-side-combined groupBy over the inline centers
+        — per-iteration driver state is the (k, d) centroid matrix only,
+        so the loop scales to any row count.  Assignment is ``predict``'s.
 
-        Why the centers stay INLINE LITERALS (r13 adjudication of the r12
-        deferred idea): carrying them as a broadcast one-row relation would
-        let every iteration share one compiled codegen source instead of
-        janino-recompiling per-iteration literals, but the measured
-        interleaved A/B (3 process pairs, min-of-3 each) was 3.3–3.4 s
-        literal vs 5.4–9.3 s broadcast — the per-iteration
-        BroadcastExchange + AQE stage overhead costs far more than the
-        ~0.5 s/source recompile it avoids, and the recompiles are absorbed
-        by the warm rep anyway (the 5 per-iteration sources are
-        deterministic, so re-runs hit the codegen cache)."""
+        Why the centers stay inline literals: what the literal form cost
+        was the driver building each iteration's plan one Column at a time
+        over py4j, not codegen.  Parsed once, the assignment and the
+        per-cluster means are two SQL strings per iteration: a fit with 2
+        iterations at k=4, d=8 sends 66 py4j commands instead of 5,188,
+        and perfbench's traced ``cluster.kmeans_fit`` driver time fell
+        from 2.85 s to 0.43 s per call (4 cores).  A broadcast one-row
+        relation of centers would share one codegen source across
+        iterations, but was measured slower (3.3–3.4 s literal vs 5.4–9.3 s
+        broadcast per fit, interleaved): its per-iteration
+        BroadcastExchange and AQE stage cost more than the per-iteration
+        codegen it saves."""
         cols = list(feature_cols)
         centers = self.init_centers.copy()
         if centers.shape != (self.n_clusters, len(cols)):
@@ -114,19 +116,15 @@ class KMeans(Base):
                 f"init_centers shape {centers.shape} != "
                 f"({self.n_clusters}, {len(cols)})"
             )
-        data = df.select(*[F.col(c).cast("double").alias(c) for c in cols])
+        means = F.expr(f"array({', '.join(f'avg({sql_ident(c)})' for c in cols)})")
         n_iter = 0
         for _ in range(self.max_iter):
             self.cluster_centers_ = centers
             assigned = self.predict(data, cols, out_col="__cluster")
-            rows = (
-                assigned.groupBy("__cluster")
-                .agg(*[F.avg(c).alias(c) for c in cols])
-                .collect()
-            )
+            rows = assigned.groupBy("__cluster").agg(means).collect()
             new = centers.copy()
-            for r in rows:
-                new[int(r["__cluster"])] = [r[c] for c in cols]
+            for label, mean in rows:
+                new[label] = mean
             n_iter += 1
             shift = float(np.sqrt(((new - centers) ** 2).sum(axis=1)).max())
             centers = new
@@ -163,34 +161,32 @@ class KMeans(Base):
         self._inertia = v
         _INERTIA_PENDING.pop(self, None)
 
-    # -- scoring expressions over broadcast centers (no shuffle) ------------
-    def _sq_dist_expr(self, center: np.ndarray, cols: list[str]) -> Column:
-        d = F.lit(0.0)
-        for c, v in zip(cols, center):
-            d = d + (F.col(c).cast("double") - float(v)) ** 2
-        return d
+    # -- scoring expressions over the inline centers (no shuffle) -----------
+    def _sq_dist_sql(self, cols: list[str]) -> list[str]:
+        """Squared distance to each center, one SQL string each, summed
+        left to right from 0.0."""
+        xs = [sql_double_col(c) for c in cols]
+        return ["0.0D" + "".join(f" + power({x} - {sql_double(v)}, 2)"
+                                 for x, v in zip(xs, center))
+                for center in self.cluster_centers_]
 
     @staticmethod
-    def _argmin_expr(dists: list[Column]) -> Column:
-        """Index of the smallest distance, ties to the LOWEST cluster id
-        (strict `<` scan) — the single tie-break definition shared by the
-        literal and broadcast-relation assignment forms."""
-        best = F.lit(0)
-        best_d = dists[0]
-        for i in range(1, len(dists)):
-            cond = dists[i] < best_d
-            best = F.when(cond, F.lit(i)).otherwise(best)
-            best_d = F.when(cond, dists[i]).otherwise(best_d)
-        return best
+    def _least(args: list[str]) -> str:
+        """SQL minimum of ``args``; ``least`` takes two or more."""
+        return args[0] if len(args) == 1 else f"least({', '.join(args)})"
 
     def predict(self, df: DataFrame, feature_cols: list[str] | None = None,
                 out_col: str = "label") -> DataFrame:
-        """Nearest-center assignment as a pure expression (labels_, pyx:392)."""
+        """Nearest-center assignment as a pure expression (labels_, pyx:392):
+        the least (distance, id) struct, so the plan is linear in k and ties
+        go to the LOWEST cluster id.  A null feature makes every distance
+        null; nulls order first, so such a row gets label 0."""
         cols = feature_cols or self._cols
         if self.cluster_centers_ is None:
             raise RuntimeError("model not fitted")
-        dists = [self._sq_dist_expr(c, cols) for c in self.cluster_centers_]
-        return df.withColumn(out_col, self._argmin_expr(dists).cast("int"))
+        pairs = [f"named_struct('d', {d}, 'i', {i})"
+                 for i, d in enumerate(self._sq_dist_sql(cols))]
+        return df.withColumn(out_col, F.expr(f"{self._least(pairs)}.i"))
 
     def fit_predict(self, df: DataFrame, feature_cols: list[str],
                     out_col: str = "label") -> DataFrame:
@@ -202,19 +198,11 @@ class KMeans(Base):
         cols = feature_cols or self._cols
         if self.cluster_centers_ is None:
             raise RuntimeError("model not fitted")
-        return df.select(
-            *df.columns,
-            *[
-                F.sqrt(self._sq_dist_expr(c, cols)).alias(f"dist_{i}")
-                for i, c in enumerate(self.cluster_centers_)
-            ],
-        )
+        return df.selectExpr("*", *[f"sqrt({d}) AS dist_{i}"
+                                    for i, d in enumerate(self._sq_dist_sql(cols))])
 
     def score(self, df: DataFrame, feature_cols: list[str] | None = None) -> float:
         """Negative inertia on the given frame (kmeans.pyx:574)."""
         cols = feature_cols or self._cols
-        dists = [self._sq_dist_expr(c, cols) for c in self.cluster_centers_]
-        min_d = dists[0]
-        for d in dists[1:]:
-            min_d = F.least(min_d, d)
-        return -df.agg(F.sum(min_d)).first()[0]
+        least = self._least(self._sq_dist_sql(cols))
+        return -df.agg(F.expr(f"sum({least})")).first()[0]

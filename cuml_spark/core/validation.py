@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+from cuml_spark.core.exprs import sql_double_col, sql_ident
+
 _ALLOWED = (NumericType,)
 
 
@@ -35,7 +37,7 @@ def to_double_cols(df: DataFrame, cols: list[str]) -> DataFrame:
                 f"column {c!r} has non-numeric type {schema[c].simpleString()}; "
                 "cuML accepts float32/float64 features only"
             )
-    return df.select(*[F.col(c).cast("double").alias(c) for c in cols])
+    return df.selectExpr(*[f"{sql_double_col(c)} AS {sql_ident(c)}" for c in cols])
 
 
 def check_features(

@@ -20,28 +20,11 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from cuml_spark.core.base import Base
+from cuml_spark.core.exprs import sql_dot, sql_double, sql_double_col, sql_ident
 from cuml_spark.core.validation import check_features
-
-
-def _moment_aggregate(df: DataFrame, cols: list[str]) -> tuple[np.ndarray, np.ndarray, int]:
-    """One-pass (Σx, ΣxxT, n) over the feature columns."""
-    d = len(cols)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, a in enumerate(cols):
-        aggs.append(F.sum(a).alias(f"__s_{i}"))
-        for j, b in enumerate(cols[i:], start=i):
-            aggs.append(F.sum(F.col(a) * F.col(b)).alias(f"__g_{i}_{j}"))
-    row = df.agg(*aggs).first()
-    n = row["__n"]
-    s = np.array([row[f"__s_{i}"] for i in range(d)])
-    g = np.zeros((d, d))
-    for i in range(d):
-        for j in range(i, d):
-            g[i, j] = g[j, i] = row[f"__g_{i}_{j}"]
-    return s, g, n
+from cuml_spark.ops.linalg import moment_aggregate
 
 
 def _sign_flip(components: np.ndarray) -> np.ndarray:
@@ -77,8 +60,9 @@ class PCA(Base):
 
     def fit(self, df: DataFrame, feature_cols: list[str]) -> "PCA":
         data = check_features(df, feature_cols)
-        s, g, n = _moment_aggregate(data, feature_cols)
-        mean = s / n
+        n, m = moment_aggregate(data, feature_cols)
+        mean = m[0, 1:] / n
+        g = m[1:, 1:]
         cov = (g - n * np.outer(mean, mean)) / (n - 1)
         evals, evecs = np.linalg.eigh(cov)  # ascending
         order = np.argsort(evals)[::-1]
@@ -102,16 +86,15 @@ class PCA(Base):
         cols = feature_cols or self._cols
         if self.components_ is None:
             raise RuntimeError("model not fitted")
-        out_cols = []
+        centered = [f"({sql_double_col(c)} - {sql_double(m)})" for c, m in zip(cols, self.mean_)]
+        out = []
         for i, comp in enumerate(self.components_):
-            e = F.lit(0.0)
-            for c, w, m in zip(cols, comp, self.mean_):
-                e = e + (F.col(c).cast("double") - float(m)) * float(w)
+            e = sql_dot("0.0D", centered, comp)
             if self.whiten:
-                e = e / float(np.sqrt(self.explained_variance_[i]) or 1.0)
-            out_cols.append(e.alias(f"{prefix}{i}"))
-        keep = [c for c in df.columns if c not in cols]
-        return df.select(*keep, *out_cols)
+                e = f"({e}) / {sql_double(np.sqrt(self.explained_variance_[i]) or 1.0)}"
+            out.append(f"{e} AS {sql_ident(f'{prefix}{i}')}")
+        keep = [sql_ident(c) for c in df.columns if c not in cols]
+        return df.selectExpr(*keep, *out)
 
     def fit_transform(self, df: DataFrame, feature_cols: list[str]) -> DataFrame:
         return self.fit(df, feature_cols).transform(df, feature_cols)
@@ -121,14 +104,11 @@ class PCA(Base):
         if self.components_ is None:
             raise RuntimeError("model not fitted")
         k = len(self.components_)
-        pcs = [F.col(f"{prefix}{i}").cast("double") for i in range(k)]
+        pcs = [sql_double_col(f"{prefix}{i}") for i in range(k)]
         if self.whiten:
-            pcs = [p * float(np.sqrt(self.explained_variance_[i])) for i, p in enumerate(pcs)]
-        out = []
-        for j, c in enumerate(self._cols):
-            e = F.lit(float(self.mean_[j]))
-            for i in range(k):
-                e = e + pcs[i] * float(self.components_[i, j])
-            out.append(e.alias(c))
-        keep = [c for c in df.columns if not c.startswith(prefix)]
-        return df.select(*keep, *out)
+            pcs = [f"({p} * {sql_double(np.sqrt(self.explained_variance_[i]))})"
+                   for i, p in enumerate(pcs)]
+        out = [f"{sql_dot(sql_double(self.mean_[j]), pcs, self.components_[:, j])} AS {sql_ident(c)}"
+               for j, c in enumerate(self._cols)]
+        keep = [sql_ident(c) for c in df.columns if not c.startswith(prefix)]
+        return df.selectExpr(*keep, *out)

@@ -10,11 +10,12 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from cuml_spark.core.base import Base
+from cuml_spark.core.exprs import sql_dot, sql_double_col, sql_ident
 from cuml_spark.core.validation import check_features
-from cuml_spark.decomposition.pca import _moment_aggregate, _sign_flip
+from cuml_spark.decomposition.pca import _sign_flip
+from cuml_spark.ops.linalg import moment_aggregate
 
 
 class TruncatedSVD(Base):
@@ -35,7 +36,8 @@ class TruncatedSVD(Base):
 
     def fit(self, df: DataFrame, feature_cols: list[str]) -> "TruncatedSVD":
         data = check_features(df, feature_cols)
-        s, g, n = _moment_aggregate(data, feature_cols)
+        n, m = moment_aggregate(data, feature_cols)
+        s, g = m[0, 1:], m[1:, 1:]
         evals, evecs = np.linalg.eigh(g)  # XᵀX, no centering
         order = np.argsort(evals)[::-1]
         evals = np.maximum(evals[order], 0.0)
@@ -65,14 +67,11 @@ class TruncatedSVD(Base):
         cols = feature_cols or self._cols
         if self.components_ is None:
             raise RuntimeError("model not fitted")
-        out_cols = []
-        for i, comp in enumerate(self.components_):
-            e = F.lit(0.0)
-            for c, w in zip(cols, comp):
-                e = e + F.col(c).cast("double") * float(w)
-            out_cols.append(e.alias(f"{prefix}{i}"))
-        keep = [c for c in df.columns if c not in cols]
-        return df.select(*keep, *out_cols)
+        xs = [sql_double_col(c) for c in cols]
+        out = [f"{sql_dot('0.0D', xs, comp)} AS {sql_ident(f'{prefix}{i}')}"
+               for i, comp in enumerate(self.components_)]
+        keep = [sql_ident(c) for c in df.columns if c not in cols]
+        return df.selectExpr(*keep, *out)
 
     def fit_transform(self, df: DataFrame, feature_cols: list[str]) -> DataFrame:
         return self.fit(df, feature_cols).transform(df, feature_cols)
@@ -80,12 +79,8 @@ class TruncatedSVD(Base):
     def inverse_transform(self, df: DataFrame, prefix: str = "sv") -> DataFrame:
         if self.components_ is None:
             raise RuntimeError("model not fitted")
-        k = len(self.components_)
-        out = []
-        for j, c in enumerate(self._cols):
-            e = F.lit(0.0)
-            for i in range(k):
-                e = e + F.col(f"{prefix}{i}").cast("double") * float(self.components_[i, j])
-            out.append(e.alias(c))
-        keep = [c for c in df.columns if not c.startswith(prefix)]
-        return df.select(*keep, *out)
+        svs = [sql_double_col(f"{prefix}{i}") for i in range(len(self.components_))]
+        out = [f"{sql_dot('0.0D', svs, self.components_[:, j])} AS {sql_ident(c)}"
+               for j, c in enumerate(self._cols)]
+        keep = [sql_ident(c) for c in df.columns if not c.startswith(prefix)]
+        return df.selectExpr(*keep, *out)

@@ -262,13 +262,22 @@ def q_prims_matrix_rng(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     med_sum = med_row["v"]
     sqrt_sum = sqrt_row["v"]
+
+    # moment gates at 5 standard errors, so they hold at every SF (a fixed
+    # ±0.05 is 0.7σ at sf0.001's ~200 rows); a sample sd's standard error
+    # is σ·√((κ−1)/4n), κ the kurtosis: 1.8 uniform, 3 normal
+    def within(value: float, true: float, sd: float) -> bool:
+        return abs(value - true) < 5 * sd / np.sqrt(n)
+
+    unif_sd = 12 ** -0.5
     return spark.createDataFrame(
         [(
             round(float(med_sum), 4), round(float(sqrt_sum), 4),
             round(float(red["k0"]), 4), round(float(red["k1"]), 4),
             int(g["n"]), int(g["s"]),
-            bool(0.45 < u["m"] < 0.55 and 0.25 < u["s"] < 0.33),
-            bool(abs(nm["m"]) < 0.05 and 0.9 < nm["s"] < 1.1),
+            bool(within(u["m"], 0.5, unif_sd)
+                 and within(u["s"], unif_sd, unif_sd * 0.2 ** 0.5)),
+            bool(within(nm["m"], 0.0, 1.0) and within(nm["s"], 1.0, 0.5 ** 0.5)),
             bool(pm["cnt"] == n
                  and pm["possum"] == n * (n + 1) // 2
                  and pm["moved"] > 0.5),

@@ -16,7 +16,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from cuml_spark.core.validation import check_features
-from cuml_spark.linear_model.linear_regression import LinearRegression, _gram_aggregate
+from cuml_spark.linear_model.linear_regression import LinearRegression
+from cuml_spark.ops.linalg import moment_aggregate
 
 
 def _cd_solve(gram: np.ndarray, corr: np.ndarray, n: int, l1: float, l2: float,
@@ -57,7 +58,8 @@ class Lasso(LinearRegression):
 
     def fit(self, df: DataFrame, feature_cols: list[str], label_col: str) -> "Lasso":
         data = check_features(df, [*feature_cols, label_col])
-        xtx, xty, n, _ = _gram_aggregate(data, feature_cols, label_col)
+        n, m = moment_aggregate(data, feature_cols, label_col)
+        xtx, xty = m[:, :-1], m[:, -1]
         l1 = self.alpha * self._l1_ratio
         l2 = self.alpha * (1.0 - self._l1_ratio)
         if self.fit_intercept:

@@ -24,30 +24,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cuml_spark.core.base import Base
+from cuml_spark.core.exprs import sql_dot, sql_double, sql_double_col
 from cuml_spark.core.validation import check_features
-
-
-def _gram_aggregate(df: DataFrame, cols: list[str], y: str) -> tuple[np.ndarray, np.ndarray, int, float]:
-    """One-pass XᵀX, Xᵀy, n, ȳ over [1, x_1..x_d] (intercept column folded in)."""
-    d = len(cols)
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__n"), F.sum(y).alias("__sy")]
-    for i, a in enumerate(cols):
-        aggs.append(F.sum(a).alias(f"__s_{i}"))  # Xᵀ·1
-        aggs.append(F.sum(F.col(a) * F.col(y)).alias(f"__sy_{i}"))
-        for j, b in enumerate(cols[i:], start=i):
-            aggs.append(F.sum(F.col(a) * F.col(b)).alias(f"__g_{i}_{j}"))
-    row = df.agg(*aggs).first()
-    n = row["__n"]
-    xtx = np.zeros((d + 1, d + 1))
-    xty = np.zeros(d + 1)
-    xtx[0, 0] = n
-    xty[0] = row["__sy"]
-    for i in range(d):
-        xtx[0, i + 1] = xtx[i + 1, 0] = row[f"__s_{i}"]
-        xty[i + 1] = row[f"__sy_{i}"]
-        for j in range(i, d):
-            xtx[i + 1, j + 1] = xtx[j + 1, i + 1] = row[f"__g_{i}_{j}"]
-    return xtx, xty, n, row["__sy"] / n
+from cuml_spark.ops.linalg import moment_aggregate
 
 
 class LinearRegression(Base):
@@ -71,7 +50,8 @@ class LinearRegression(Base):
 
     def fit(self, df: DataFrame, feature_cols: list[str], label_col: str) -> "LinearRegression":
         data = check_features(df, [*feature_cols, label_col])
-        xtx, xty, n, ymean = _gram_aggregate(data, feature_cols, label_col)
+        _, m = moment_aggregate(data, feature_cols, label_col)
+        xtx, xty = m[:, :-1], m[:, -1]
         if not self.fit_intercept:
             xtx, xty = xtx[1:, 1:], xty[1:]
         if self.normalize and self.fit_intercept:
@@ -101,10 +81,7 @@ class LinearRegression(Base):
         cols = feature_cols or self._cols
         if self.coef_ is None or cols is None:
             raise RuntimeError("model not fitted")
-        expr = F.lit(float(self.intercept_))
-        for c, w in zip(cols, self.coef_):
-            expr = expr + F.col(c).cast("double") * float(w)
-        return expr
+        return F.expr(sql_dot(sql_double(self.intercept_), map(sql_double_col, cols), self.coef_))
 
     def predict(self, df: DataFrame, feature_cols: list[str] | None = None,
                 out_col: str = "prediction") -> DataFrame:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cuml_spark.core.base import Base
+from cuml_spark.core.exprs import sql_dot, sql_double, sql_double_col
 from cuml_spark.core.validation import check_features
 
 
@@ -43,6 +44,7 @@ class LogisticRegression(Base):
         self.coef_: np.ndarray | None = None
         self.intercept_: np.ndarray | None = None
         self.classes_: np.ndarray | None = None
+        self.n_iter_: int | None = None
         self._model = None
         self._cols: list[str] | None = None
 
@@ -93,6 +95,8 @@ class LogisticRegression(Base):
             self.coef_ = self._model.coefficientMatrix.toArray()
             self.intercept_ = np.array(self._model.interceptVector)
         self.classes_ = np.arange(self._model.numClasses)
+        # read off the training summary MLlib kept from the fit: no job
+        self.n_iter_ = int(self._model.summary.totalIterations)
         self._cols = list(feature_cols)
         return self
 
@@ -119,7 +123,5 @@ class LogisticRegression(Base):
         """Sigmoid scoring as a pure column expression for binary models."""
         if self.coef_ is None or self._cols is None:
             raise RuntimeError("model not fitted")
-        z = F.lit(float(self.intercept_[0]))
-        for c, w in zip(self._cols, self.coef_[0]):
-            z = z + F.col(c).cast("double") * float(w)
-        return 1.0 / (1.0 + F.exp(-z))
+        z = sql_dot(sql_double(self.intercept_[0]), map(sql_double_col, self._cols), self.coef_[0])
+        return F.expr(f"1.0D / (exp(-({z})) + 1.0D)")

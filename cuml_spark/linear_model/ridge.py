@@ -17,7 +17,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from cuml_spark.core.validation import check_features
-from cuml_spark.linear_model.linear_regression import LinearRegression, _gram_aggregate
+from cuml_spark.linear_model.linear_regression import LinearRegression
+from cuml_spark.ops.linalg import moment_aggregate
 
 
 class Ridge(LinearRegression):
@@ -30,7 +31,8 @@ class Ridge(LinearRegression):
 
     def fit(self, df: DataFrame, feature_cols: list[str], label_col: str) -> "Ridge":
         data = check_features(df, [*feature_cols, label_col])
-        xtx, xty, n, _ = _gram_aggregate(data, feature_cols, label_col)
+        n, m = moment_aggregate(data, feature_cols, label_col)
+        xtx, xty = m[:, :-1], m[:, -1]
         d = len(feature_cols)
         if self.fit_intercept:
             # center via the Gram identities instead of a second data pass:

@@ -14,10 +14,11 @@ perform, with Spark's treeAggregate playing the role of the device reduction.
 Driver-side numpy then handles the tiny d×d factorizations, mirroring how the
 reference calls cuSOLVER on device-resident d×d Grams.
 
-Scale note: one shuffle-free pass over the data, d²+d aggregate columns;
-valid while d ≲ a few hundred (the regime every caller in this library is
-in — PCA/TSVD/OLS Grams).  For d beyond that, move to block outer-product
-accumulation via mapInPandas (not needed by any current consumer).
+Scale note: one shuffle-free pass over the data, about d²/2 sums in one
+array aggregate; valid while d ≲ a few hundred (the regime every caller in
+this library is in — PCA/TSVD/OLS Grams).  For d beyond that, move to block
+outer-product accumulation via mapInPandas (not needed by any current
+consumer).
 """
 
 from __future__ import annotations
@@ -26,32 +27,43 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cuml_spark.core.exprs import sql_double, sql_double_col
+
+
+def moment_aggregate(df: DataFrame, cols: list[str], y: str | None = None,
+                     *, intercept: bool = True) -> tuple[int, np.ndarray]:
+    """Σ zᵢzⱼ over the rows of z = [1, x₁ … x_d] (the 1 only with
+    ``intercept``), and Σ zᵢ·y when ``y`` is given, in ONE pass: one
+    ``array(count, Σxᵢ, Σxᵢxⱼ, Σxᵢy, …)`` aggregate parsed from one SQL
+    string.  Returns (n, G): the exact row count and the symmetric Gram of
+    z, with Σ z·y as an extra last column.  The moments of PCA/TSVD, the
+    normal equations of OLS/Ridge/Lasso/CD and :func:`gram_matrix` all
+    read this one aggregate."""
+    rows = [None] * intercept + [sql_double_col(c) for c in cols]
+    right = rows + ([sql_double_col(y)] if y is not None else [])
+    cells = [(i, j) for i in range(len(rows)) for j in range(i, len(right))]
+    terms = ["count(1)"]
+    for i, j in cells:
+        a, b = rows[i], right[j]
+        terms.append("count(1)" if b is None else f"sum({b})" if a is None
+                     else f"sum({a} * {b})")
+    vals = np.array(df.agg(F.expr(f"array({', '.join(terms)})")).first()[0], dtype=float)
+    g = np.zeros((len(rows), len(right)))
+    for (i, j), v in zip(cells, vals[1:]):
+        g[i, j] = v
+        if j < len(rows):
+            g[j, i] = v
+    return int(vals[0]), g
+
 
 def gram_matrix(df: DataFrame, cols: list[str]) -> np.ndarray:
     """XᵀX as a d×d numpy array — one aggregate pass (gemm.h:78 role)."""
-    d = len(cols)
-    exprs = []
-    for i in range(d):
-        for j in range(i, d):
-            exprs.append(
-                F.sum(F.col(cols[i]).cast("double") * F.col(cols[j]).cast("double"))
-                .alias(f"g_{i}_{j}")
-            )
-    row = df.agg(*exprs).first()
-    g = np.zeros((d, d))
-    for i in range(d):
-        for j in range(i, d):
-            g[i, j] = g[j, i] = float(row[f"g_{i}_{j}"])
-    return g
+    return moment_aggregate(df, cols, intercept=False)[1]
 
 
 def gram_vector(df: DataFrame, cols: list[str], y: str) -> np.ndarray:
     """Xᵀy as a length-d numpy array, same single pass."""
-    row = df.agg(
-        *[F.sum(F.col(c).cast("double") * F.col(y).cast("double")).alias(f"v_{i}")
-          for i, c in enumerate(cols)]
-    ).first()
-    return np.array([float(row[f"v_{i}"]) for i in range(len(cols))])
+    return moment_aggregate(df, cols, y, intercept=False)[1][:, -1]
 
 
 def row_norms(df: DataFrame, cols: list[str], out_col: str = "row_norm",
@@ -75,23 +87,25 @@ def col_norms(df: DataFrame, cols: list[str], squared: bool = False) -> DataFram
     return spark.createDataFrame(rows, "col string, norm double")
 
 
+def _with_linear_map(df: DataFrame, cols: list[str], coef: np.ndarray,
+                     prefix: str) -> DataFrame:
+    """Append ``{prefix}j`` = Σᵢ colᵢ·coef[i, j] over the nonzero
+    coefficients, summed left to right (0.0 when all are zero)."""
+    return df.withColumns({
+        f"{prefix}{j}": F.expr(" + ".join(
+            f"{sql_double_col(c)} * {sql_double(w)}" for c, w in zip(cols, coef[:, j]) if w != 0.0
+        ) or "0.0D")
+        for j in range(coef.shape[1])
+    })
+
+
 def tall_skinny_qr(df: DataFrame, cols: list[str]) -> tuple[DataFrame, np.ndarray]:
     """QR of a tall-skinny matrix (qr.h:40): R = chol(XᵀX)ᵀ from one Gram
     pass; Q = X·R⁻¹ applied as a codegen'd linear map — no row shuffle.
     Returns (Q as DataFrame with q_0..q_{d-1} appended, R d×d)."""
     g = gram_matrix(df, cols)
     r = np.linalg.cholesky(g).T          # X = QR with R upper-triangular
-    r_inv = np.linalg.inv(r)
-    out = df
-    for j in range(len(cols)):
-        expr = None
-        for i, c in enumerate(cols):
-            if r_inv[i, j] == 0.0:
-                continue
-            t = F.col(c).cast("double") * float(r_inv[i, j])
-            expr = t if expr is None else expr + t
-        out = out.withColumn(f"q_{j}", expr if expr is not None else F.lit(0.0))
-    return out, r
+    return _with_linear_map(df, cols, np.linalg.inv(r), "q_"), r
 
 
 def svd_tall(df: DataFrame, cols: list[str], k: int | None = None
@@ -106,17 +120,8 @@ def svd_tall(df: DataFrame, cols: list[str], k: int | None = None
     k = k or len(cols)
     sv = np.sqrt(np.maximum(w[:k], 0.0))
     vt = v[:, :k].T
-    out = df
-    for j in range(k):
-        expr = None
-        for i, c in enumerate(cols):
-            coef = v[i, j] / sv[j] if sv[j] > 0 else 0.0
-            if coef == 0.0:
-                continue
-            t = F.col(c).cast("double") * float(coef)
-            expr = t if expr is None else expr + t
-        out = out.withColumn(f"u_{j}", expr if expr is not None else F.lit(0.0))
-    return out, sv, vt
+    coef = np.divide(v[:, :k], sv, out=np.zeros((len(cols), k)), where=sv > 0)
+    return _with_linear_map(df, cols, coef, "u_"), sv, vt
 
 
 def randomized_svd(df: DataFrame, cols: list[str], k: int,

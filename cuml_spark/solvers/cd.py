@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from cuml_spark.core.base import Base
 from cuml_spark.core.validation import check_features
 from cuml_spark.linear_model.lasso import _cd_solve
-from cuml_spark.linear_model.linear_regression import _gram_aggregate
+from cuml_spark.ops.linalg import moment_aggregate
 
 
 class CD(Base):
@@ -41,7 +41,8 @@ class CD(Base):
 
     def fit(self, df: DataFrame, feature_cols: list[str], label_col: str) -> "CD":
         data = check_features(df, [*feature_cols, label_col])
-        xtx, xty, n, _ = _gram_aggregate(data, feature_cols, label_col)
+        n, m = moment_aggregate(data, feature_cols, label_col)
+        xtx, xty = m[:, :-1], m[:, -1]
         l1 = self.alpha * self.l1_ratio
         l2 = self.alpha * (1.0 - self.l1_ratio)
         if self.fit_intercept:

@@ -93,3 +93,56 @@ def test_kmeans_size_tiers(spark, n):
     want = sorted((n + 2) // 3 if g < n % 3 or n % 3 == 0 else n // 3
                   for g in range(3))
     assert sizes == sorted([n - 2 * (n // 3), n // 3, n // 3]) or sizes == want
+
+
+def test_kmeans_assignment_plan_linear_in_k(spark):
+    """Explicit-init fit and predict at k = 16, d = 32.  The analyzed
+    plan stays linear in k·d (the former nested-``when`` argmin doubled
+    with every center: 4.6 million characters of plan JSON at k = 4, out of memory at
+    k = 12), and labels, distances and score equal numpy's, an exact tie
+    going to the lowest cluster id."""
+    from pyspark.sql import functions as F
+
+    k, d = 16, 32
+    cols = [f"x{j}" for j in range(d)]
+    schema = ", ".join(f"{c} double" for c in cols)
+    rng = np.random.default_rng(16)
+    # integer centers; each blob is its center ± integer offsets, so the
+    # cluster means are exact and the init centers are already the fit
+    centers = rng.integers(-20, 21, size=(k, d)).astype(float)
+    offsets = rng.integers(-2, 3, size=(4, d)).astype(float)
+    train = spark.createDataFrame(
+        [tuple(map(float, c + s * o)) for c in centers for o in offsets for s in (1, -1)],
+        schema)
+
+    def plan_json_len(df):
+        return len(df._jdf.queryExecution().analyzed().toJSON())
+
+    for n_clusters in (4, k):  # the small k first: it fails fast if exponential
+        model = KMeans(n_clusters=n_clusters)
+        model.cluster_centers_, model._cols = centers[:n_clusters], cols
+        assert plan_json_len(model.predict(train)) <= 2_000 * n_clusters * d + 50_000
+
+    km = KMeans(n_clusters=k, max_iter=5, init_centers=centers).fit(train, cols)
+    np.testing.assert_array_equal(km.cluster_centers_, centers)
+    assert km.n_iter_ == 1
+
+    batch = rng.normal(scale=12.0, size=(60, d))
+    a, b = 3, 11  # a planted exact tie: the midpoint of two centers
+    batch[0] = centers[a] + (centers[b] - centers[a]) / 2
+    rows = [(i, *map(float, x)) for i, x in enumerate(batch)]
+    rows.append((len(batch), None, *map(float, batch[1, 1:])))  # a null feature
+    df = spark.createDataFrame(rows, f"row_id long, {schema}")
+
+    sq = ((batch[:, None] - centers[None]) ** 2).sum(-1)
+    want = sq.argmin(axis=1)
+    assert min(a, b) == want[0] and sq[0, a] == sq[0, b]
+    got = dict(km.predict(df).select("row_id", "label").collect())
+    assert [got[i] for i in range(len(batch))] == want.tolist()
+    assert got[len(batch)] == 0  # null distances order first: label 0
+
+    dists = km.transform(df.where(F.col("row_id") < len(batch))).orderBy("row_id").toPandas()
+    np.testing.assert_allclose(dists[[f"dist_{i}" for i in range(k)]].to_numpy(),
+                               np.sqrt(sq), rtol=1e-12)
+    score = km.score(df.where(F.col("row_id") < len(batch)))
+    assert score == pytest.approx(-sq.min(axis=1).sum(), rel=1e-12)
