@@ -71,7 +71,10 @@ def _local_cluster(pdf: pd.DataFrame, eps: float,
 
     Output rows: (point_id, comp_key, kind) — kind 'core' for every core
     point in the block, 'border' once per distinct core-neighbor component
-    of each HOME non-core point.
+    of each HOME non-core point.  Components are numbered in ascending
+    ``pid`` order, so a block's keys do not depend on the order its rows
+    arrive in: a recomputed pass yields the keys of the component map
+    collected from an earlier one.
     """
     if pdf["cell_key"].nunique() > 1:
         return pd.concat(
@@ -89,6 +92,7 @@ def _local_cluster(pdf: pd.DataFrame, eps: float,
             f"the eps-grid splits the dense region, pre-aggregate duplicate "
             f"points, or raise max_cell_points if executors have headroom."
         )
+    pdf = pdf.sort_values("pid", kind="stable")
     cell_key = pdf["cell_key"].iloc[0]
     X = np.vstack(pdf["x"].to_numpy())
     ids = pdf["pid"].to_numpy()
@@ -179,16 +183,19 @@ class DBSCAN(Base):
         from cuml_spark.core.session import ensure_parallelism
 
         # several downstream jobs (degree counts, per-cell clustering, the
-        # two quotient-graph collects) all read this cache — spread it across
-        # cores first (no-op when the scan already yields enough splits)
+        # two quotient-graph collects) all read these frames — spread them
+        # across cores first (no-op when the scan already yields enough
+        # splits).  They are local checkpoints, not caches: the blocks
+        # belong to this fit alone and go with its returned frame, and a
+        # later fit's identical plan cannot read them
         pts = ensure_parallelism(
             df.select(
                 F.col(id_col).alias("pid"),
                 F.array(*[F.col(c).cast("double") for c in cols]).alias("x"),
             )
-        ).cache()
+        ).localCheckpoint(eager=False)
 
-        core_flags = self._core_flags(pts, len(cols)).cache()
+        core_flags = self._core_flags(pts, len(cols)).localCheckpoint(eager=False)
         blocks = self._blocks(pts.join(core_flags, "pid"), len(cols))
         # group cells into hash buckets: one python invocation per bucket
         # (cells cluster independently inside _local_cluster), so UDF call
@@ -214,7 +221,7 @@ class DBSCAN(Base):
                 lambda pdf: _local_cluster(pdf, eps, max_cell),
                 "pid long, comp_key string, kind string",
             )
-            .cache()
+            .localCheckpoint(eager=False)
         )
 
         # quotient graph: a core point in several blocks glues its components

@@ -17,8 +17,6 @@ column expressions over the broadcast centers.
 
 from __future__ import annotations
 
-import weakref
-
 import numpy as np
 from pyspark.ml.clustering import KMeans as MLKMeans
 from pyspark.ml.feature import VectorAssembler
@@ -28,13 +26,6 @@ from pyspark.sql import functions as F
 from cuml_spark.core.base import Base
 from cuml_spark.core.exprs import sql_double, sql_double_col, sql_ident
 from cuml_spark.core.validation import check_features
-
-
-# deferred-inertia bookkeeping for the explicit-init Lloyd path: the fit
-# frame is held OUTSIDE the estimator's __dict__ so pickling (Base strips
-# DataFrames) and save() (which parquets DataFrame attrs) never see it;
-# the weak key lets a dropped model release the frame
-_INERTIA_PENDING: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 class KMeans(Base):
@@ -133,33 +124,14 @@ class KMeans(Base):
         self.cluster_centers_ = centers
         self.n_iter_ = n_iter
         self._cols = cols
-        # inertia is one more full aggregate over the fit frame that most
-        # consumers (the harness query included) never read — defer it to
-        # first ``inertia_`` access (r13; the value is identical: same
-        # score() expression over the same frame and final centers)
-        self._inertia = None
-        _INERTIA_PENDING[self] = (data, cols)
+        self.inertia_ = -self.score(data, cols)
         return self
 
-    @property
-    def inertia_(self):
-        """Sum of squared distances to the nearest center (kmeans.pyx:574).
-        The MLlib path sets it eagerly from the training summary; the
-        explicit-init Lloyd path computes it LAZILY on first access (one
-        aggregate over the fit frame — r13).  A Lloyd model pickled before
-        the first access loses the pending frame (Base strips DataFrames)
-        and reports None, matching every other stripped runtime handle."""
-        if self._inertia is None:
-            pending = _INERTIA_PENDING.pop(self, None)
-            if pending is not None:
-                data, cols = pending
-                self._inertia = -self.score(data, cols)
-        return self._inertia
-
-    @inertia_.setter
-    def inertia_(self, v) -> None:
-        self._inertia = v
-        _INERTIA_PENDING.pop(self, None)
+    def __setstate__(self, state: dict) -> None:
+        # pickles of the deferred-inertia era stored the value as _inertia
+        if "_inertia" in state:
+            state.setdefault("inertia_", state.pop("_inertia"))
+        super().__setstate__(state)
 
     # -- scoring expressions over the inline centers (no shuffle) -----------
     def _sq_dist_sql(self, cols: list[str]) -> list[str]:

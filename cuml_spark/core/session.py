@@ -58,47 +58,6 @@ def _session_token(spark: SparkSession) -> str:
     return tok
 
 
-def session_cached(cache: dict, spark: SparkSession, sf_dir: str, build,
-                   *, state: str | None = None):
-    """Memoize ``build()`` per (LIVE session, sf_dir[, state]) in
-    ``cache``.
-
-    Keying on the session token (applicationId — see
-    :func:`_session_token`) keeps a restart (or regenerated testdata at
-    the same path) from serving a plan/model bound to a dead session;
-    entries for the same sf_dir under a superseded session OR a
-    superseded ``state`` are evicted eagerly so their cached blocks can
-    be GC'd.  ``state`` is for callers whose cached value depends on
-    more than the path (e.g. the CMS harness model keys on the source
-    file's size+mtime): pass it SEPARATELY rather than folding it into
-    ``sf_dir``, so eviction still matches per-sf_dir — a folded key
-    would never match the eviction scan and leak one entry per
-    regeneration.  Shared by every harness cross-query cache (minhash
-    signatures, LSH candidates, verified Jaccard pairs, the DBSCAN fit,
-    the lineitem feature frame, the DSIR gate model) — one
-    implementation, one place to fix the keying.
-    """
-    key = (_session_token(spark), sf_dir, state)
-    out = cache.get(key)
-    if out is None:
-        for k in [k for k in cache if k[1] == sf_dir]:
-            del cache[k]
-        out = build()
-        cache[key] = out
-    elif hasattr(out, "storageLevel") and not (
-        out.storageLevel.useMemory or out.storageLevel.useDisk
-    ):
-        # an external spark.catalog.clearCache() (bench.py runs one
-        # between queries) unpersisted the memoized frame: re-register
-        # it so the NEXT action re-materializes ONCE — without this,
-        # every downstream action (each fit iteration, each pair-join
-        # consumer) silently recomputes the full lineage (measured:
-        # text_neardup_groups 0.75s cached vs 19-27s re-deriving the
-        # verified-pair table per action)
-        out.cache()
-    return out
-
-
 _TABLE_HANDLES: dict = {}
 
 
@@ -110,10 +69,10 @@ def read_table(spark: SparkSession, path: str):
     harness reads each table 1–3× per query construction, so a full
     bench sweep spent tens of seconds re-reading the same footers (r12).
     A DataFrame is an immutable plan handle, so reuse across queries is
-    safe; the cache keys on the LIVE session (id — the session_cached
-    convention) and the file's (size, mtime), so a restarted session or
-    a regenerated file gets a fresh handle, and stale keys for the same
-    path are evicted eagerly.
+    safe; the cache keys on the LIVE session (:func:`_session_token`) and
+    the file's (size, mtime), so a restarted session or a regenerated
+    file gets a fresh handle, and stale keys for the same path are
+    evicted eagerly.
     """
     import os as _os
 

@@ -201,15 +201,6 @@ class MAERandomForestRegressor(Base):
             y_edges: list[float] | None = None,
             bag_cols: list[str] | None = None,
             bootstrap: bool = True) -> "MAERandomForestRegressor":
-        import os as _os
-        import time as _time
-        _prof = _os.environ.get("CUML_SPARK_PROFILE") == "1"
-        _t0 = _time.time()
-
-        def _mark(tag: str) -> None:
-            if _prof:
-                print(f"[mae_forest] {tag}: +{_time.time() - _t0:.3f}s")
-
         cols = list(feature_cols)
         extra_bag = [c for c in (bag_cols or []) if c not in cols]
         data = df.select(
@@ -227,7 +218,6 @@ class MAERandomForestRegressor(Base):
             feature_edges = [_quantile_edges(data, c, self.n_bins) for c in cols]
         elif y_edges is None:
             y_edges = _quantile_edges(data, "__y", self.n_y_bins)
-        _mark("edges")
         self.feature_edges_ = feature_edges
         self._cols = cols
 
@@ -292,9 +282,7 @@ class MAERandomForestRegressor(Base):
         # (interleaved A/B at sf0.1: median fit 2.11s → 1.63s).  See
         # core.session.right_size for the sizing rule and the 100 TB
         # no-op guarantee.
-        if not _os.environ.get("CUML_MAE_NO_COALESCE"):
-            rows = right_size(rows)
-        rows = rows.cache()
+        rows = right_size(rows).cache()
         # exactly ONE upstream cache is live at a time: the base frame, or
         # the newest materialized level frame once the lazy-chain bound is
         # crossed; a superseded cache dies right after the next hist job
@@ -450,8 +438,6 @@ class MAERandomForestRegressor(Base):
                 splits = hist_df.groupBy("__tree", "__node", "__feat").applyInPandas(
                     reducer, "t long, nd long, ft long, score double, bin long"
                 ).collect()
-            _mark(f"level{_level} hist+select ({len(splits)} split rows, "
-                  f"driver_path={driver_path})")
             # the hist job above materialized the current rows cache — the
             # previous level's frame is no longer referenced by any plan
             if prev_rows is not None:
@@ -502,7 +488,6 @@ class MAERandomForestRegressor(Base):
             nd = r["__node"]
             if nd not in trees_state[r["__tree"]]:
                 trees_state[r["__tree"]][nd] = float(r["v"])
-        _mark("leaves")
         if prev_rows is not None:
             prev_rows.unpersist()
         live_cache.unpersist()

@@ -6,7 +6,7 @@ function of the eps-graph and is replayed in DuckDB with self-joins.
 clusters are exactly the connected components of the core-core eps-graph
 (csr.h:853 weak_cc semantics), so the multiset of core sizes is deterministic
 (no border tie-breaking involved) and the DuckDB oracle replays it with a
-recursive-CTE transitive closure.  Both queries derive from ONE shared fit.
+recursive-CTE transitive closure.  Each query runs its own fit.
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ from cuml_spark.cluster import DBSCAN
 from cuml_spark.core.session import read_table
 
 _EPS, _MIN_SAMPLES = 0.35, 5
-_FIT_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -31,18 +30,10 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One DBSCAN fit per (session, sf_dir), shared by both queries (labels
-    + roles); keyed on the live session so a restart never serves a dead
-    cached plan (same contract as harness_text lsh_pairs_cached)."""
-    from cuml_spark.core.session import session_cached
-
-    def build() -> DataFrame:
-        pts = _points(spark, sf_dir)
-        return DBSCAN(eps=_EPS, min_samples=_MIN_SAMPLES).fit_predict(
-            pts, ["x1", "x2"], id_col="pid", include_role=True
-        ).cache()
-
-    return session_cached(_FIT_CACHE, spark, sf_dir, build)
+    """The DBSCAN fit both queries project: labels and roles."""
+    return DBSCAN(eps=_EPS, min_samples=_MIN_SAMPLES).fit_predict(
+        _points(spark, sf_dir), ["x1", "x2"], id_col="pid", include_role=True
+    )
 
 
 def q_dbscan_roles(spark: SparkSession, sf_dir: str) -> DataFrame:

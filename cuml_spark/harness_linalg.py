@@ -174,11 +174,9 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins are pair-first).  DuckDB replays the shingling with a lateral
     generate_series and the candidate set with the same banded-minhash SQL
     that backs ``lsh_pairs``."""
-    from cuml_spark.harness_text import jaccard_pairs_cached
+    from cuml_spark.harness_text import jaccard_pairs
 
-    # verified pairs computed once per (session, sf_dir) — shared with
-    # text_neardup_groups (one pipeline, two reported stages)
-    out = jaccard_pairs_cached(spark, sf_dir)
+    out = jaccard_pairs(spark, sf_dir)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 

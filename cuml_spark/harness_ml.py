@@ -27,34 +27,30 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, f"{sf_dir}/{name}.parquet")
 
 
-_ML_BASE_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _ml_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared feature frame for the five lineitem model queries (rf_accuracy,
+    """Feature frame of the five lineitem model queries (rf_accuracy,
     sgd_hinge_accuracy, rf_regression, rf_mae_regression, mbsgd_fit): one
-    cached scan carrying every derived column they need, the same cross-query
-    reuse pattern as the DBSCAN shared fit.  Keyed by (session, sf_dir)."""
-    from cuml_spark.core.session import ensure_parallelism, session_cached
+    scan carrying every derived column they need, materialized for the
+    calling query alone — its split, fit passes and scoring read the
+    blocks instead of re-scanning lineitem, and no later query's plan can
+    match them."""
+    from cuml_spark.core.session import ensure_parallelism
 
-    def build() -> DataFrame:
-        li = _t(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_linenumber",
-            "l_quantity", "l_discount", "l_tax",
-            (F.col("l_extendedprice") > 30000).cast("double").alias("is_high"),
-            (F.col("l_quantity") * (1 + F.col("l_tax"))
-             + 100 * F.col("l_discount")).alias("y"),
-        )
-        # single-row-group local files scan as 1 split; spread the cached
-        # working set before the iterative fits hit it.  16 partitions, not
-        # full core count: each fit iteration is one job over this frame, so
-        # per-task scheduling overhead × iterations dominates beyond ~16
-        # (measured: RF fit 4.1s@4p, 1.7s@8p, 2.0s@16p, 1.8s@32p; MAE forest
-        # 5.4s@8p, 6.9s@32p — fits plateau at 8-16 while UDF-scoring paths
-        # keep scaling, which is why score paths use the full default)
-        return ensure_parallelism(li, min_parts=16).cache()
-
-    return session_cached(_ML_BASE_CACHE, spark, sf_dir, build)
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber",
+        "l_quantity", "l_discount", "l_tax",
+        (F.col("l_extendedprice") > 30000).cast("double").alias("is_high"),
+        (F.col("l_quantity") * (1 + F.col("l_tax"))
+         + 100 * F.col("l_discount")).alias("y"),
+    )
+    # single-row-group local files scan as 1 split; spread the working
+    # set before the iterative fits hit it.  16 partitions, not full core
+    # count: each fit iteration is one job over this frame, so per-task
+    # scheduling overhead × iterations dominates beyond ~16 (measured: RF
+    # fit 4.1s@4p, 1.7s@8p, 2.0s@16p, 1.8s@32p; MAE forest 5.4s@8p,
+    # 6.9s@32p — fits plateau at 8-16 while UDF-scoring paths keep
+    # scaling, which is why score paths use the full default)
+    return ensure_parallelism(li, min_parts=16).localCheckpoint(eager=False)
 
 
 def q_pca_variance_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,7 +363,7 @@ def q_mbsgd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the classifier branch (8 per-step hinge jobs + one scoring agg) and
     # the regressor branch (fused squared-loss fit + R² pass) are fully
-    # independent chains of small jobs over the shared cached frame — run
+    # independent chains of small jobs over the checkpointed base — run
     # them overlapped so one branch's jobs back-fill while the other waits
     # on its collect (guide §2.6; r12).  Each branch computes exactly what
     # it computed serially.

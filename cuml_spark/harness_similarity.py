@@ -308,18 +308,18 @@ def q_text_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group report (group id = the kept doc id = min member, member
     count, member id checksum).  Every stage is a registry operator
     (lsh_pairs, ngram_jaccard, near_dup_groups); the verified pair set
-    is session-cached and SHARED with ngram_jaccard (one pipeline, two
-    reported stages), and grouping uses the driver union-find tier (the
-    edge list is candidate-bounded).  The DuckDB oracle replays the
+    is ngram_jaccard's, built in this query's own plan, and grouping
+    uses the driver union-find tier (the edge list is
+    candidate-bounded).  The DuckDB oracle replays the
     candidates + verify SQL and closes components with a recursive
     reachability CTE."""
-    from cuml_spark.harness_text import jaccard_pairs_cached
+    from cuml_spark.harness_text import jaccard_pairs
     from cuml_spark.similarity.neardup import near_dup_groups
 
     # threshold the ROUNDED score: the oracle inherits round(...,6) from
     # the ngram_jaccard SQL, so a raw-score filter would diverge on pairs
     # whose exact Jaccard sits in [0.7999995, 0.8) (review r9 finding)
-    edges = jaccard_pairs_cached(spark, sf_dir).where(
+    edges = jaccard_pairs(spark, sf_dir).where(
         F.round(F.col("jaccard"), 6) >= 0.8)
     # candidate-bounded edge list -> driver union-find (near_dup_groups'
     # <=500k-edge tier), not the iterative distributed CC: grouping a few
@@ -386,17 +386,17 @@ WITH en AS (
 
 def q_neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FineWeb-style dedup ACTION: same clusters as
-    ``text_neardup_groups`` (session-shared verified pair cache), but
+    ``text_neardup_groups`` (the same verified pair set), but
     each group keeps its BEST member — here the longest document
     (n_chars), ties to the smaller id — via keep_best_in_groups' single
     map-side-combinable min(struct) aggregation.  Reports the kept doc
     alongside the group checksum columns so the oracle pins both the
     grouping and the selection."""
-    from cuml_spark.harness_text import jaccard_pairs_cached
+    from cuml_spark.harness_text import jaccard_pairs
     from cuml_spark.similarity.neardup import (keep_best_in_groups,
                                                near_dup_groups)
 
-    edges = jaccard_pairs_cached(spark, sf_dir).where(
+    edges = jaccard_pairs(spark, sf_dir).where(
         F.round(F.col("jaccard"), 6) >= 0.8)
     groups = near_dup_groups(edges)
     docs = read_table(spark, f"{sf_dir}/documents.parquet")

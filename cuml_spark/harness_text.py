@@ -69,26 +69,10 @@ WITH pos AS (
 """
 
 
-_SIG_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def _sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Minhash signatures computed once per (session, sf_dir) — the shared
-    upstream of both ``minhash_signatures`` and the LSH candidate pairs."""
-    from cuml_spark.core.session import ensure_parallelism, session_cached
-
-    def build() -> DataFrame:
-        out = minhash_signatures(
-            ensure_parallelism(_t(spark, sf_dir, "documents"))
-        ).cache()
-        out.count()
-        return out
-
-    return session_cached(_SIG_CACHE, spark, sf_dir, build)
-
-
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sigs_cached(spark, sf_dir)
+    from cuml_spark.core.session import ensure_parallelism
+
+    return minhash_signatures(ensure_parallelism(_t(spark, sf_dir, "documents")))
 
 
 def _sql_sig_cte() -> str:
@@ -103,54 +87,25 @@ def _sql_minhash() -> str:
     return _sql_sig_cte() + "\nSELECT * FROM sig"
 
 
-_LSH_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate pairs computed once per (session, sf_dir) — shared by
-    ``lsh_pairs`` and the ``ngram_jaccard`` verify stage (the two halves of
-    the two-stage near-dup pipeline run over the same candidate set).
-    Keyed on the live SparkSession (session_cached's contract)."""
-    from cuml_spark.core.session import ensure_parallelism, session_cached
-
-    def build() -> DataFrame:
-        out = lsh_candidate_pairs(
-            ensure_parallelism(_t(spark, sf_dir, "documents")),
-            signatures=_sigs_cached(spark, sf_dir),
-        ).cache()
-        out.count()  # materialize: consumers reference it multiple times
-        # within single actions (pair join + both id sides)
-        return out
-
-    return session_cached(_LSH_CACHE, spark, sf_dir, build)
-
-
 def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lsh_pairs_cached(spark, sf_dir)
+    from cuml_spark.core.session import ensure_parallelism
+
+    return lsh_candidate_pairs(ensure_parallelism(_t(spark, sf_dir, "documents")))
 
 
-_JACCARD_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 5-gram Jaccard over the cached LSH candidates, computed once
-    per (session, sf_dir) — shared by ``ngram_jaccard`` and
-    ``text_neardup_groups`` (the verify stage and the grouping stage of
-    one pipeline read the same verified pair set; without sharing, the
-    grouping query re-paid the whole pack+intersect pass: measured
-    19.3s cold / 8.9s warm at sf0.1)."""
-    from cuml_spark.core.session import ensure_parallelism, session_cached
+def jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact 5-gram Jaccard over the LSH candidates — the verified pair
+    set that ``ngram_jaccard``, ``text_neardup_groups`` and
+    ``neardup_keep_best`` each build for themselves (the verify stage and
+    the grouping stages of one pipeline)."""
+    from cuml_spark.core.session import ensure_parallelism
     from cuml_spark.text.dedup import jaccard_similarity_pairs
 
-    def build() -> DataFrame:
-        docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
-        out = jaccard_similarity_pairs(
-            docs, k=5, candidates=lsh_pairs_cached(spark, sf_dir)
-        ).cache()
-        out.count()
-        return out
-
-    return session_cached(_JACCARD_CACHE, spark, sf_dir, build)
+    docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
+    # the verify pass reads the candidates twice (to pick the docs to
+    # pack, then to pair them): materialize them once, for this call only
+    cands = q_lsh_pairs(spark, sf_dir).localCheckpoint(eager=False)
+    return jaccard_similarity_pairs(docs, k=5, candidates=cands)
 
 
 def _sql_lsh_pairs() -> str:
@@ -1774,11 +1729,7 @@ def q_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = _t(spark, sf_dir, "documents")
     docs = ensure_parallelism(raw)
     ref = raw.filter(F.col("doc_id") < 100)
-    # reuse the session-cached corpus signatures (shared with
-    # minhash_signatures / lsh_pairs — one index, many consumers)
-    out = fuzzy_cross_contamination(
-        docs, ref, threshold=0.2,
-        corpus_signatures=_sigs_cached(spark, sf_dir))
+    out = fuzzy_cross_contamination(docs, ref, threshold=0.2)
     return out.select(
         "doc_id", "n_matched_refs",
         F.round("max_jaccard", 6).alias("max_jaccard"), "first_ref_id",
@@ -2446,9 +2397,6 @@ WHERE round(dot / (sqrt(na.n2) * sqrt(nb.n2)), 6) >= 0.3
 """
 
 
-_CMS_MODEL_CACHE: dict[tuple[int, str], object] = {}
-
-
 def q_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch (ops/cms.py): fixed-memory approximate token
     frequencies — the fit is ONE (row, bucket)-keyed aggregation bounded
@@ -2458,11 +2406,10 @@ def q_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Since r11 the fit uses the default 'sliced' scheme — ONE md5 per
     token occurrence, rows take 32-bit digest slices (d× less hash work
     in the corpus-scale stage; the oracle's pos CTE slices the same
-    digest with substr(md5(tok), 8*i+1, 8)).  The fitted model is
-    session-cached (the DSIR-gate pattern — a sketch is fit once and
-    queried many times; refitting per call was ~2 s of every bench rep
-    for an identical d × w table)."""
-    from cuml_spark.core.session import ensure_parallelism, session_cached
+    digest with substr(md5(tok), 8*i+1, 8)).  Each call fits its own
+    sketch from the live table, so the estimates and the exact counts
+    always come from the same data."""
+    from cuml_spark.core.session import ensure_parallelism
     from cuml_spark.ops.cms import cms_estimate_col, fit_cms
     from cuml_spark.text.lm import _token_array
 
@@ -2473,23 +2420,7 @@ def q_cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("exact_cnt").desc(), F.col("tok").asc())
         .limit(30)
     )
-    # key the model by the SOURCE FILE state, not just the path: the
-    # exact_cnt column recomputes from the live table each call, and a
-    # stale sketch paired with fresh truth could violate the
-    # never-undercounts contract if testdata were regenerated in-place
-    # mid-session (whole-frame caches go stale uniformly; a mixed
-    # cached-model/fresh-truth result must not).  The state rides the
-    # dedicated `state` key so session_cached's per-sf_dir eviction
-    # still matches — folding it into sf_dir leaked one stale model per
-    # regeneration (ADVICE r10).
-    import os as _os
-
-    st = _os.stat(f"{sf_dir}/documents.parquet")
-    model = session_cached(
-        _CMS_MODEL_CACHE, spark, sf_dir,
-        lambda: fit_cms(toks, "tok", depth=4, width=1024),
-        state=f"{st.st_size}|{st.st_mtime_ns}",
-    )
+    model = fit_cms(toks, "tok", depth=4, width=1024)
     return exact.select(
         "tok",
         F.col("exact_cnt").cast("long").alias("exact_cnt"),

@@ -188,11 +188,13 @@ def jaccard_similarity_pairs(df: DataFrame, k: int = 5, threshold: float = 0.0,
                 ).alias("hs"),
             )
             .withColumn("n_sh", F.size("hs"))
-            .cache()  # consumed twice (a-side and b-side of the pair join)
+            # consumed twice (a-side and b-side of the pair join):
+            # materialized BEFORE the dual reference — parallel subtrees
+            # of one action otherwise each recompute the shingle-hash
+            # transform.  A local checkpoint, not a cache, so a later
+            # call's identical plan cannot read this call's blocks
+            .localCheckpoint()
         )
-        packed.count()  # materialize BEFORE the dual reference — parallel
-        # subtrees of one action otherwise race past the cold cache and
-        # each recompute the shingle-hash transform
 
         @F.pandas_udf("long")
         def _inter(a: pd.Series, b: pd.Series) -> pd.Series:

@@ -110,3 +110,70 @@ def test_dbscan_dense_cell_guard(spark):
     # same data under the cap clusters fine
     out = DBSCAN(eps=10.0, min_samples=3).fit_predict(df, ["x", "y"], "pid")
     assert out.filter("label = 0").count() == 50
+
+
+def test_local_cluster_keys_ignore_row_order():
+    """Component keys of one cell block are the same whatever order its
+    rows arrive in — a recomputed per-cell pass must reproduce the keys
+    of the component map collected from the first computation."""
+    import pandas as pd
+
+    from cuml_spark.cluster.dbscan import _local_cluster
+
+    # two separated core groups; the higher pids come first, plus one
+    # home border point next to the first group and one noise point
+    pts = [(10, (0.0, 0.0), True), (11, (0.1, 0.0), True),
+           (12, (0.2, 0.0), True), (1, (5.0, 5.0), True),
+           (2, (5.1, 5.0), True), (3, (5.2, 5.0), True),
+           (20, (0.3, 0.0), False), (30, (9.0, 9.0), False)]
+    pdf = pd.DataFrame({
+        "cell_key": "0,0",
+        "pid": [p for p, _, _ in pts],
+        "x": [list(x) for _, x, _ in pts],
+        "is_core": [c for _, _, c in pts],
+        "is_home": True,
+    })
+
+    def members(frame):
+        out = _local_cluster(frame, eps=0.15, max_cell_points=100)
+        return set(out.itertuples(index=False, name=None))
+
+    forward = members(pdf)
+    assert forward == members(pdf.iloc[::-1].reset_index(drop=True))
+    assert {k for _, k, kind in forward if kind == "core"} == {"0,0#0", "0,0#1"}
+    assert (20, "0,0#1", "border") in forward
+
+
+def test_dbscan_cluster_sizes_after_clear_cache(spark):
+    """bench.py's order: ``dbscan_roles``, ``clearCache()``, then
+    ``dbscan_cluster_sizes`` must still equal the DuckDB oracle.  sf0.01,
+    because at sf0.001 every point is noise."""
+    duckdb = pytest.importorskip("duckdb")
+    from conftest import SF_UNIT
+
+    from cuml_spark.harness_cluster import (_SQL_DBSCAN_CLUSTER_SIZES,
+                                            q_dbscan_cluster_sizes,
+                                            q_dbscan_roles)
+
+    q_dbscan_roles(spark, SF_UNIT).collect()
+    spark.catalog.clearCache()
+    got = sorted(tuple(r) for r in
+                 q_dbscan_cluster_sizes(spark, SF_UNIT).collect())
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW customer AS SELECT * FROM "
+            f"'{SF_UNIT}/customer.parquet'")
+    want = sorted(con.sql(_SQL_DBSCAN_CLUSTER_SIZES).fetchall())
+    assert len(want) > 1
+    assert got == want
+
+
+def test_dbscan_refit_reads_no_earlier_fit(spark):
+    """A fit's working frames are its own: a second fit of the same input
+    plans no InMemoryRelation left by the first."""
+    pts = [(i, float(i % 10) * 0.1, float(i // 10) * 0.1) for i in range(60)]
+    df = spark.createDataFrame(pts, "pid long, x double, y double")
+    DBSCAN(eps=0.15, min_samples=3).fit_predict(df, ["x", "y"], "pid").collect()
+    again = DBSCAN(eps=0.15, min_samples=3).fit_predict(df, ["x", "y"], "pid")
+    plan = again._jdf.queryExecution().withCachedData().toString()
+    assert "InMemoryRelation" not in plan
+    assert again.filter("label = 0").count() == 60

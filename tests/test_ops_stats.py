@@ -104,54 +104,3 @@ def test_mean_center_roundtrip_with_mu(spark):
     restored = mean_center(centered, ["v"], add=True, means=mu)
     got = {r["id"]: r["v"] for r in restored.collect()}
     assert got == {1: 10.0, 2: 20.0, 3: 30.0}
-
-
-def test_session_cached_reregisters_after_clearcache(spark):
-    """bench.py clears the catalog cache between queries: a memoized
-    frame must come back CACHED from session_cached afterwards, so the
-    next action re-materializes once instead of recomputing lineage per
-    action (the r10 text_neardup_groups 19-27s pathology)."""
-    from cuml_spark.core.session import session_cached
-
-    cache: dict = {}
-    built = []
-
-    def build():
-        built.append(1)
-        df = spark.range(10).cache()
-        df.count()
-        return df
-
-    out1 = session_cached(cache, spark, "/tmp/x", build)
-    assert out1.storageLevel.useMemory
-    spark.catalog.clearCache()
-    assert not out1.storageLevel.useMemory  # externally unpersisted
-    out2 = session_cached(cache, spark, "/tmp/x", build)
-    assert out2 is out1          # memo hit, not a rebuild
-    assert built == [1]
-    assert out2.storageLevel.useMemory  # re-registered
-    out2.unpersist()
-
-
-def test_session_cached_state_evicts_superseded(spark):
-    """Regression (ADVICE r10): a state-keyed entry (e.g. the CMS model
-    keyed on source size+mtime) must EVICT its predecessor for the same
-    sf_dir on regeneration, not accumulate one stale entry per mtime."""
-    from cuml_spark.core.session import session_cached
-
-    cache: dict = {}
-    a = session_cached(cache, spark, "/tmp/x", lambda: "model_v1",
-                       state="size1|mtime1")
-    assert a == "model_v1" and len(cache) == 1
-    # same sf_dir, new state (testdata regenerated): old entry evicted
-    b = session_cached(cache, spark, "/tmp/x", lambda: "model_v2",
-                       state="size2|mtime2")
-    assert b == "model_v2" and len(cache) == 1
-    # unchanged state is a memo hit
-    c = session_cached(cache, spark, "/tmp/x", lambda: "model_v3",
-                       state="size2|mtime2")
-    assert c == "model_v2" and len(cache) == 1
-    # a DIFFERENT sf_dir coexists
-    d = session_cached(cache, spark, "/tmp/y", lambda: "other",
-                       state="s")
-    assert d == "other" and len(cache) == 2

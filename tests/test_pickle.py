@@ -98,6 +98,27 @@ def test_pickle_kmeans_lloyd(spark, xy):
         _rows(m2.predict(xy, COLS), ["label"])
 
 
+def test_pickle_kmeans_lloyd_keeps_inertia(spark, xy):
+    # pickled before anything reads inertia_: the fit set it as a float
+    init = [[-1.0, -1.0, 0.0], [1.0, 1.0, 0.0]]
+    m = KMeans(n_clusters=2, max_iter=5, tol=0.0, init_centers=init).fit(xy, COLS)
+    blob = pickle.dumps(m)
+    m2 = pickle.loads(blob)
+    assert isinstance(m2.inertia_, float) and m2.inertia_ > 0
+    assert m2.inertia_ == m.inertia_ == pytest.approx(-m.score(xy, COLS))
+
+
+def test_unpickle_kmeans_deferred_inertia_state():
+    # a pickle from when the Lloyd fit stored inertia as ``_inertia``
+    m = KMeans(n_clusters=2)
+    state = m.__getstate__()
+    del state["inertia_"]
+    state["_inertia"] = 12.5
+    m2 = KMeans.__new__(KMeans)
+    m2.__setstate__(state)
+    assert m2.inertia_ == 12.5 and "_inertia" not in m2.__dict__
+
+
 def test_pickle_mllib_kmeans_predicts_from_centers(spark, xy):
     # MLlib-fitted KMeans: java model is stripped, but predict runs off the
     # extracted centers

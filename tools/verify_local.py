@@ -3,6 +3,7 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB at sf0.01, compares row count, schema (column names), and an
 order-insensitive value hash (columns sorted by name, rows sorted by repr).
+The catalog cache is cleared after each query, as in ``bench.py``.
 
 Usage: python tools/verify_local.py [query ...]
 """
@@ -84,6 +85,10 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
             continue
+        finally:
+            # bench.py clears the cache after every query; so does this
+            # sweep, so it checks the answers the benchmark times
+            spark.catalog.clearCache()
         if name not in ORACLES:
             print(f"PASS {name}: rows-only ({len(srows)} rows, no oracle) [{time.time()-t0:.1f}s]")
             n_pass += 1
