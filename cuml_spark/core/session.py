@@ -91,21 +91,30 @@ def read_table(spark: SparkSession, path: str):
     return df
 
 
-def right_size(df, target_bytes: int = 16 << 20, floor: int = 4):
-    """Coalesce a SMALL working set so pure-JVM iterative jobs stop paying
-    per-task overheads for near-empty partitions.
+def right_size(df, target_bytes: int = 16 << 20, floor: int = 1):
+    """Coalesce a SMALL working set to one partition per ``target_bytes``
+    of it, so pure-JVM iterative jobs stop paying per-task overheads for
+    near-empty partitions.
 
     The mirror image of :func:`ensure_parallelism`: that one raises the
     partition count so Arrow/pandas-UDF stages (CPU-bound in Python) use
-    every core; this one LOWERS it for frames that feed repeated JVM-side
-    aggregations (MLlib fits, per-level tree histograms, per-epoch SGD
-    steps), where a ~10 MB frame sliced into defaultParallelism partitions
-    costs ~2·parts task launches per job and gains nothing.  Sizing comes
-    from Catalyst's free ``sizeInBytes`` estimate (~``target_bytes`` per
-    partition, floor ``floor``); ``coalesce`` only ever REDUCES partition
-    count, so a 100 TB input (estimate ≫ parts·target) is returned
-    untouched with full scan parallelism.  Do NOT use on frames feeding
-    pandas-UDF work — those want ``ensure_parallelism`` instead.
+    every core; this one LOWERS it for frames a fit caches and then
+    reduces over once per iteration (MLlib's OWL-QN, the SGD epochs, the
+    MAE forest's level histograms).  There a job over a few MB is almost
+    all fixed per-task cost, and MLlib's ``treeAggregate`` adds a final
+    shuffle stage whenever it has more than one partition.  On a 4-core
+    VM, one partition instead of 4 took a perfbench ``ml_fit_serve``
+    round from 235 to 127 tasks, and its 50k × 8 logistic fit from
+    0.99 to 0.70 s of driver time with no shuffle left.
+
+    Sizing is by bytes alone, from Catalyst's free ``sizeInBytes``
+    estimate: ``ceil(estimate / target_bytes)`` partitions, never fewer
+    than ``floor``.  A caller whose per-row work is heavy enough to want
+    cores on a small frame passes a higher ``floor`` (the MLlib random
+    forests pass 4).  ``coalesce`` only ever REDUCES the partition count,
+    so a 100 TB input (estimate ≫ parts·target) is returned untouched
+    with full scan parallelism.  Do NOT use on frames feeding pandas-UDF
+    work — those want ``ensure_parallelism`` instead.
     """
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())

@@ -117,9 +117,8 @@ def q_logreg_rule_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     solver regression drops it)."""
     from cuml_spark.core.session import ensure_parallelism
 
-    # 16 partitions (not full core count): 50 OWL-QN iterations = 50 jobs
-    # over the sample, so per-task overhead × iterations wins beyond ~16
-    # (measured fit: 8.2s@1p, 4.3s@8p, 4.8s@32p)
+    # 16 partitions for the scan and the scoring pass over every row; the
+    # fit right-sizes its own cached sample by bytes (core.session.right_size)
     li = ensure_parallelism(_t(spark, sf_dir, "lineitem"), min_parts=16).withColumn(
         "lbl", (F.col("l_discount") > 0.05).cast("int")
     )

@@ -102,10 +102,7 @@ def jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cuml_spark.text.dedup import jaccard_similarity_pairs
 
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
-    # the verify pass reads the candidates twice (to pick the docs to
-    # pack, then to pair them): materialize them once, for this call only
-    cands = q_lsh_pairs(spark, sf_dir).localCheckpoint(eager=False)
-    return jaccard_similarity_pairs(docs, k=5, candidates=cands)
+    return jaccard_similarity_pairs(docs, k=5, candidates=q_lsh_pairs(spark, sf_dir))
 
 
 def _sql_lsh_pairs() -> str:
@@ -1896,13 +1893,50 @@ FROM p
 # chunk_id is bounded by tokens/stride (synthetic docs are ~50 tokens;
 # the key space leaves room up to 100k chunks per doc regardless)
 _CHUNK_KEY_MULT = 100_000
+# the retrieval pipeline's chunk window: MAX_TOKENS-token chunks that
+# overlap by OVERLAP tokens (stride MAX_TOKENS - OVERLAP)
+MAX_TOKENS = 40
+OVERLAP = 8
+
+
+def _chunk_corpus_stats(docs: DataFrame) -> DataFrame:
+    """BM25's one-row (``__n``, ``__avgdl``) corpus stats of
+    ``chunk_documents(docs, MAX_TOKENS, overlap=OVERLAP)``, without a
+    second chunk pass (r13; the r12 plan ran the full
+    Scan→repartition→posexplode→slice chunk subtree TWICE — once inside
+    the checkpointed postings, once for this aggregate).  Every chunk but
+    a doc's last is exactly MAX_TOKENS tokens, so with n = the doc's
+    token count (same tokenizer as chunk_documents) and step =
+    MAX_TOKENS - OVERLAP:
+      chunks(n)  c = floor((greatest(n - OVERLAP, 1) - 1) / step) + 1
+      Σ chunk dl   = n + OVERLAP·(c - 1)
+    (MAX_TOKENS·(c-1) + last, and last = n - step·(c-1)).  Both corpus
+    totals are exact integers < 2^53, so the final division is
+    order-independent and bit-identical to bm25_topk's default aggregate
+    over the chunks; docs with n = 0 emit no chunks in both forms.  One
+    split+size pass over the corpus — no explode, no slice, no re-join."""
+    from cuml_spark.text.lm import _token_array
+
+    step = MAX_TOKENS - OVERLAP
+    n = F.size(_token_array("text", " "))
+    c = (F.floor((F.greatest(n - OVERLAP, F.lit(1)) - 1) / step) + 1).cast("long")
+    return (
+        docs.select(n.alias("__nt"), c.alias("__nc"))
+        .filter(F.col("__nt") >= 1)
+        .agg(
+            F.sum("__nc").alias("__n"),
+            F.sum(F.col("__nt") + OVERLAP * (F.col("__nc") - 1)).alias("__sd"),
+        )
+        .select("__n", (F.col("__sd") / F.col("__n")).alias("__avgdl"))
+    )
 
 
 def q_pipeline_retrieval_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full retrieval tier composed end-to-end, the shape a curation
     pipeline actually runs (VERDICT r8 #6): chunk the corpus to
-    model-window size (chunk_documents, 40/8 — map-only), BM25-rank the
-    CHUNKS for four query documents, lift chunk hits to documents by
+    model-window size (chunk_documents, MAX_TOKENS/OVERLAP — map-only,
+    with the corpus stats in closed form), BM25-rank the CHUNKS for
+    four query documents, lift chunk hits to documents by
     best-chunk score (top-40 chunk candidates per query, then max per
     doc — both engines apply the same cut, so the lift is exact), and
     fuse the resulting doc ranking with the embedding tier's cosine
@@ -1913,45 +1947,19 @@ def q_pipeline_retrieval_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cuml_spark.core.session import ensure_parallelism
     from cuml_spark.text.retrieval import bm25_topk, chunk_documents, rrf_fuse
 
-    from cuml_spark.text.lm import _token_array
-
     raw = _t(spark, sf_dir, "documents")
     docs = ensure_parallelism(raw)
     emb = _t(spark, sf_dir, "embeddings")
-    chunks = chunk_documents(docs, 40, overlap=8)
+    chunks = chunk_documents(docs, MAX_TOKENS, overlap=OVERLAP)
     chunk_docs = chunks.select(
         (F.col("doc_id") * _CHUNK_KEY_MULT + F.col("chunk_id")).alias("ck"),
         F.col("chunk_text").alias("text"),
     )
     qs = raw.filter(F.col("doc_id") < 4).select(
         F.col("doc_id").alias("query_id"), "text")
-    # chunk-corpus BM25 stats WITHOUT a second chunk pass (r13; the r12
-    # plan ran the full Scan→repartition→posexplode→slice chunk subtree
-    # TWICE — once inside the checkpointed postings, once for this
-    # (count, avgdl) aggregate).  For stride chunking (max_tokens=40,
-    # step=32) every chunk but a doc's last is exactly 40 tokens, so with
-    # n = the doc's token count (same tokenizer as chunk_documents):
-    #   chunks(n)  c = floor((greatest(n-8, 1) - 1) / 32) + 1
-    #   Σ chunk dl   = n + 8·(c - 1)        (40·(c-1) + last = n - 32·(c-1))
-    # Both corpus totals are exact integers < 2^53, so the final division
-    # is order-independent and bit-identical to the aggregate it replaces
-    # (avg of small-int dl sums exactly in double); docs with n = 0 emit
-    # no chunks in both forms.  One split+size pass over the corpus — no
-    # explode, no slice, no re-join.
-    _n = F.size(_token_array("text", " "))
-    _c = (F.floor((F.greatest(_n - 8, F.lit(1)) - 1) / 32) + 1).cast("long")
-    chunk_stats = (
-        docs.select(_n.alias("__nt"), _c.alias("__nc"))
-        .filter(F.col("__nt") >= 1)
-        .agg(
-            F.sum("__nc").alias("__n"),
-            F.sum(F.col("__nt") + 8 * (F.col("__nc") - 1)).alias("__sd"),
-        )
-        .select("__n", (F.col("__sd") / F.col("__n")).alias("__avgdl"))
-    )
     lex_chunks = bm25_topk(
         chunk_docs, qs, k=40, id_col="ck", score_decimals=6,
-        corpus_stats=chunk_stats)
+        corpus_stats=_chunk_corpus_stats(docs))
     lex_docs = (
         lex_chunks
         .select("query_id", (F.col("ck") / _CHUNK_KEY_MULT)

@@ -45,7 +45,6 @@ class LogisticRegression(Base):
         self.intercept_: np.ndarray | None = None
         self.classes_: np.ndarray | None = None
         self.n_iter_: int | None = None
-        self._model = None
         self._cols: list[str] | None = None
 
     def _reg_params(self, n: int) -> tuple[float, float]:
@@ -62,17 +61,12 @@ class LogisticRegression(Base):
         from cuml_spark.core.session import right_size
 
         # OWL-QN runs one treeAggregate per iteration over MLlib's cached
-        # frame — right-size small inputs so each iteration isn't sliced
-        # into near-empty tasks (measured 4.3s @ 8 parts vs 4.8s @ 32 in
-        # SCALE.md; no-op at scale)
-        # NOTE (r13): an explicit select(*feature_cols, label) here was
-        # A/B'd consistently SLOWER (3.6-3.9 -> 3.9-4.6 s on
-        # logreg_rule_accuracy in 3/3 interleaved pairs): the projection
-        # shrinks right_size's sizeInBytes estimate and over-coalesces the
-        # frame the ~20 OWL-QN treeAggregate jobs iterate over, and MLlib
-        # already projects to (label, weight, features) before its
-        # internal persist — so the wide frame never reaches the cache
-        # anyway.  Left unprojected on that evidence.
+        # frame: right-size it by bytes so a small input is one task per
+        # iteration with no final-aggregate shuffle stage (perfbench
+        # logreg_fit on 4 cores: 28 → 27 jobs, 0.104 → 0 shuffle MB;
+        # a no-op at scale).  check_features already projects to the
+        # feature and label columns, so the estimate is of what MLlib
+        # caches.
         data = right_size(
             check_features(df, [*feature_cols, label_col])
         ).withColumnRenamed(label_col, "__label")
@@ -87,41 +81,48 @@ class LogisticRegression(Base):
             maxIter=self.max_iter, fitIntercept=self.fit_intercept,
             standardization=False,
         )
-        self._model = lr.fit(assembled)
-        if self._model.numClasses == 2:
-            self.coef_ = np.array(self._model.coefficients).reshape(1, -1)
-            self.intercept_ = np.array([self._model.intercept])
+        model = lr.fit(assembled)
+        if model.numClasses == 2:
+            self.coef_ = np.array(model.coefficients).reshape(1, -1)
+            self.intercept_ = np.array([model.intercept])
         else:
-            self.coef_ = self._model.coefficientMatrix.toArray()
-            self.intercept_ = np.array(self._model.interceptVector)
-        self.classes_ = np.arange(self._model.numClasses)
+            self.coef_ = model.coefficientMatrix.toArray()
+            self.intercept_ = np.array(model.interceptVector)
+        self.classes_ = np.arange(model.numClasses)
         # read off the training summary MLlib kept from the fit: no job
-        self.n_iter_ = int(self._model.summary.totalIterations)
+        self.n_iter_ = int(model.summary.totalIterations)
         self._cols = list(feature_cols)
         return self
 
+    def _margins(self, cols: list[str]) -> list[str]:
+        terms = [sql_double_col(c) for c in cols]
+        return [sql_dot(sql_double(b), terms, w) for w, b in zip(self.coef_, self.intercept_)]
+
     def predict(self, df: DataFrame, feature_cols: list[str] | None = None,
                 out_col: str = "prediction") -> DataFrame:
+        """Class labels as one parsed expression over ``coef_`` and
+        ``intercept_``, MLlib's decision rule: binary ``z > 0`` (the 0.5
+        probability threshold), multinomial the argmax of the margins
+        with ties to the lowest class.  A row with a null or NaN feature
+        gets a null prediction (MLlib's ``VectorAssembler`` raised on a
+        null)."""
         cols = feature_cols or self._cols
-        if self._model is None:
+        if self.coef_ is None or cols is None:
             raise RuntimeError("model not fitted")
-        casted = df.select(
-            *[c for c in df.columns if c not in cols],
-            *[F.col(c).cast("double").alias(c) for c in cols],
-        )
-        assembled = VectorAssembler(inputCols=cols, outputCol="__features").transform(casted)
-        out = self._model.transform(assembled)
-        pred_col = self._model.getPredictionCol()
-        out = out.drop(
-            "__features", self._model.getRawPredictionCol(), self._model.getProbabilityCol()
-        )
-        if out_col != pred_col:
-            out = out.withColumnRenamed(pred_col, out_col)
-        return out
+        margins = self._margins(cols)
+        if len(margins) == 1:
+            label = f"CAST(nanvl({margins[0]}, NULL) > 0.0D AS DOUBLE)"
+        else:
+            # least over (-margin, class): the largest margin wins, and a
+            # tie goes to the lower class
+            best = ", ".join(f"named_struct('m', -({m}), 'i', {i})"
+                             for i, m in enumerate(margins))
+            label = (f"CASE WHEN nanvl({margins[0]}, NULL) IS NULL THEN NULL "
+                     f"ELSE CAST(least({best}).i AS DOUBLE) END")
+        return df.withColumn(out_col, F.expr(label))
 
     def predict_proba_expr(self):
         """Sigmoid scoring as a pure column expression for binary models."""
         if self.coef_ is None or self._cols is None:
             raise RuntimeError("model not fitted")
-        z = sql_dot(sql_double(self.intercept_[0]), map(sql_double_col, self._cols), self.coef_[0])
-        return F.expr(f"1.0D / (exp(-({z})) + 1.0D)")
+        return F.expr(f"1.0D / (exp(-({self._margins(self._cols)[0]})) + 1.0D)")

@@ -170,6 +170,13 @@ def jaccard_similarity_pairs(df: DataFrame, k: int = 5, threshold: float = 0.0,
         # work, and the only shuffled payload is one bounded array per doc.
         # xxhash64 collisions inside a doc's set are ~doc_len²/2⁶⁴ ≈ 1e-15 —
         # far below the fp noise the harness rounds away.
+        # The candidates are read twice (to choose the docs to pack, then
+        # to pair them): a lazy local checkpoint runs a lazy candidate
+        # plan once, inside the packing job, for this call only.  Like
+        # ``packed`` it is released when the returned frame is collected
+        # by the garbage collector, not here: that frame reads it, and a
+        # released local checkpoint cannot be recomputed.
+        candidates = candidates.select("id_a", "id_b").localCheckpoint(eager=False)
         cand_ids = (
             candidates.select(F.col("id_a").alias(id_col))
             .union(candidates.select(F.col("id_b").alias(id_col)))
@@ -220,8 +227,7 @@ def jaccard_similarity_pairs(df: DataFrame, k: int = 5, threshold: float = 0.0,
         pb = packed.select(F.col(id_col).alias("id_b"),
                            F.col("hs").alias("hs_b"), F.col("n_sh").alias("n_b"))
         out = (
-            candidates.select("id_a", "id_b")
-            .join(pa, "id_a").join(pb, "id_b")
+            candidates.join(pa, "id_a").join(pb, "id_b")
             .withColumn("inter", _inter(F.col("hs_a"), F.col("hs_b")))
             .select(
                 "id_a", "id_b",

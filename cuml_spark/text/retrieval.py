@@ -106,8 +106,15 @@ def bm25_topk(
     closed forms of each document's token count — r13).  The caller
     GUARANTEES value equality with the default aggregate; both n and the
     summed lengths are exact integers below 2^53, so sum/count division
-    is order-independent and bit-identical however they are derived.
+    is order-independent and bit-identical however they are derived.  A
+    frame without those two columns is rejected here, from its schema.
     """
+    if corpus_stats is not None:
+        missing = {"__n", "__avgdl"} - set(corpus_stats.columns)
+        if missing:
+            raise ValueError(
+                f"corpus_stats lacks column(s) {sorted(missing)}; it must be a "
+                "one-row (__n, __avgdl) frame")
     if stopwords is not None:
         stopwords = [str(s) for s in stopwords]
 

@@ -1,5 +1,5 @@
-"""Structural budgets of the engine's model fits and scorers: Spark jobs
-and parquet scans per call, read from Spark's in-process status stores,
+"""Structural budgets of the engine's model fits and scorers: Spark jobs,
+tasks and parquet scans per call, read from Spark's in-process status stores,
 and the py4j commands the driver sends to build a model's plan.
 
 Counts are deterministic at a fixed input, unlike wall time, so a fit
@@ -37,9 +37,10 @@ def _last_execution_id(sql_store) -> int:
 
 
 def spark_budget(spark, fn, group: str):
-    """Run ``fn()`` under its own job group → (result, jobs, scans): the
-    group's Spark job count, and the parquet scan nodes that read files
-    in the SQL executions ``fn`` started."""
+    """Run ``fn()`` under its own job group → (result, jobs, scans, tasks):
+    the group's Spark job count, the parquet scan nodes that read files
+    in the SQL executions ``fn`` started, and the tasks the group's jobs
+    ran (a skipped stage's tasks are not counted)."""
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
     sql_store = spark._jsparkSession.sharedState().statusStore()
@@ -51,7 +52,8 @@ def spark_budget(spark, fn, group: str):
     finally:
         sc._jsc.clearJobGroup()
     bus.waitUntilEmpty()  # the stores are filled by the listener bus
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    job_ids = sc.statusTracker().getJobIdsForGroup(group)
+    tasks = sum(sc._jsc.sc().statusStore().job(j).numCompletedTasks() for j in job_ids)
     scans = 0
     for exec_id in range(first, _last_execution_id(sql_store) + 1):
         values = sql_store.executionMetrics(exec_id)
@@ -60,7 +62,7 @@ def spark_budget(spark, fn, group: str):
             node = nodes.apply(i)
             if node.name().startswith("Scan parquet"):
                 scans += _metric(node, values, "number of files read") > 0
-    return out, jobs, scans
+    return out, len(job_ids), scans, tasks
 
 
 @pytest.fixture()
@@ -76,7 +78,7 @@ def test_fit_bigram_lm_one_scan_two_jobs(spark, docs, max_bigrams):
     job and the one Arrow collect."""
     from cuml_spark.text.lm import fit_bigram_lm
 
-    model, jobs, scans = spark_budget(
+    model, jobs, scans, _ = spark_budget(
         spark, lambda: fit_bigram_lm(docs, max_bigrams=max_bigrams),
         f"budget/fit_bigram_lm/{max_bigrams}")
     assert model.vocab_size > 0
@@ -90,7 +92,7 @@ def test_fit_bigram_lm_capped_scans_once(spark, docs):
     probe jobs, then the top-k (two) and the per-w1 query (one)."""
     from cuml_spark.text.lm import fit_bigram_lm
 
-    model, jobs, scans = spark_budget(
+    model, jobs, scans, _ = spark_budget(
         spark, lambda: fit_bigram_lm(docs, max_bigrams=10),
         "budget/fit_bigram_lm/capped")
     assert len(model.bigram_counts) == 10
@@ -118,12 +120,35 @@ def test_fit_dsir_one_aggregation(spark, docs):
     from cuml_spark.text.dsir import fit_dsir
 
     target = docs.where(F.col("lang") == "fr")
-    model, jobs, scans = spark_budget(
+    model, jobs, scans, _ = spark_budget(
         spark, lambda: fit_dsir(target, docs, num_buckets=512),
         "budget/fit_dsir")
     assert model.log_ratios
     assert scans == 2
     assert jobs <= 2
+
+
+def test_jaccard_lazy_candidates_computed_once(spark, docs):
+    """jaccard_similarity_pairs reads its candidates twice (to choose the
+    docs to pack, then to pair them).  A lazy LSH candidate frame must
+    cost no more than one its caller checkpoints first, checkpoint
+    included: the same scans, no more jobs or tasks."""
+    from cuml_spark.core.session import ensure_parallelism
+    from cuml_spark.text.dedup import jaccard_similarity_pairs, lsh_candidate_pairs
+
+    frame = ensure_parallelism(docs)
+
+    def verify(candidates):
+        return sorted(jaccard_similarity_pairs(frame, candidates=candidates).collect())
+
+    pairs, jobs, scans, tasks = spark_budget(
+        spark, lambda: verify(lsh_candidate_pairs(frame).localCheckpoint()),
+        "budget/jaccard/checkpointed")
+    lazy_pairs, lazy_jobs, lazy_scans, lazy_tasks = spark_budget(
+        spark, lambda: verify(lsh_candidate_pairs(frame)), "budget/jaccard/lazy")
+    assert lazy_pairs == pairs and pairs
+    assert lazy_scans == scans
+    assert lazy_jobs <= jobs and lazy_tasks <= tasks
 
 
 # -- ml tier ------------------------------------------------------------------
@@ -222,8 +247,11 @@ def test_ml_fit_jobs(spark, matrix):
     """Job counts of the ml-tier fits: a Lloyd iteration (assignment,
     per-cluster means) is 2 jobs, plus 2 once per fit for the eager
     ``inertia_`` aggregate; a Ridge or PCA fit 2, a LogisticRegression
-    fit 23.  How the driver builds their expressions must not add a
-    job."""
+    fit 22 (the row count, then MLlib's summarizer and 20 loss
+    ``treeAggregate`` jobs).  The logistic fit's working set is right-sized
+    to one partition, so each of its jobs is one task: no final-aggregate
+    shuffle stage per OWL-QN iteration.  How the driver builds their
+    expressions must not add a job."""
     from cuml_spark.cluster import KMeans
     from cuml_spark.decomposition import PCA
     from cuml_spark.linear_model import LogisticRegression, Ridge
@@ -232,29 +260,32 @@ def test_ml_fit_jobs(spark, matrix):
     init = np.arange(4 * 8, dtype=float).reshape(4, 8) / 4
     jobs = {}
     for iters in (1, 3):
-        _, jobs[iters], _ = spark_budget(
+        _, jobs[iters], _, _ = spark_budget(
             spark, lambda: KMeans(n_clusters=4, max_iter=iters, tol=-1.0,
                                   init_centers=init).fit(matrix, cols),
             f"budget/kmeans/{iters}")
     assert jobs[1] == 2 + 2 and jobs[3] - jobs[1] == 2 * 2
-    _, ridge_jobs, _ = spark_budget(spark, lambda: Ridge().fit(matrix, cols, "y"),
-                                    "budget/ridge")
-    _, pca_jobs, _ = spark_budget(spark, lambda: PCA(n_components=3).fit(matrix, cols),
-                                  "budget/pca")
-    _, logreg_jobs, _ = spark_budget(
+    _, ridge_jobs, _, _ = spark_budget(spark, lambda: Ridge().fit(matrix, cols, "y"),
+                                       "budget/ridge")
+    _, pca_jobs, _, _ = spark_budget(spark, lambda: PCA(n_components=3).fit(matrix, cols),
+                                     "budget/pca")
+    _, logreg_jobs, _, logreg_tasks = spark_budget(
         spark, lambda: LogisticRegression(max_iter=20).fit(matrix, cols, "lbl"),
         "budget/logreg")
-    assert (ridge_jobs, pca_jobs, logreg_jobs) == (2, 2, 23)
+    assert (ridge_jobs, pca_jobs, logreg_jobs) == (2, 2, 22)
+    assert logreg_tasks == logreg_jobs
 
 
 def test_logreg_n_iter_reads_the_training_summary(spark, matrix):
-    """``n_iter_`` is MLlib's ``totalIterations``, read without a job, and
-    survives a pickle round trip."""
+    """``n_iter_`` is MLlib's ``totalIterations``, read off the training
+    summary during the fit: a plain int, reporting a binding ``max_iter``.
+    The model keeps no MLlib handle, so pickle carries all of its state."""
+    from pyspark.ml.wrapper import JavaParams
+
     from cuml_spark.linear_model import LogisticRegression
 
     lr = LogisticRegression(max_iter=20).fit(matrix, _cols(8), "lbl")
-    total, jobs, _ = spark_budget(spark, lambda: lr._model.summary.totalIterations,
-                                  "budget/logreg_summary")
-    assert jobs == 0
-    assert lr.n_iter_ == total and 1 <= total <= 20
+    assert not any(isinstance(v, JavaParams) for v in vars(lr).values())
+    assert isinstance(lr.n_iter_, int) and 1 <= lr.n_iter_ <= 20
+    assert LogisticRegression(max_iter=3).fit(matrix, _cols(8), "lbl").n_iter_ == 3
     assert pickle.loads(pickle.dumps(lr)).n_iter_ == lr.n_iter_

@@ -142,6 +142,29 @@ def test_logistic_binary(lineitem):
     assert acc > 0.65
 
 
+@pytest.mark.parametrize("label", [
+    "CAST(l_extendedprice > 30000 AS DOUBLE)",
+    "CAST(CASE WHEN l_discount > 0.06 THEN 2 WHEN l_quantity > 25 THEN 1 ELSE 0 END AS DOUBLE)",
+])
+def test_logistic_predict_matches_mllib(lineitem, label):
+    """predict's parsed expression gives MLlib's labels: binary at the
+    0.5 threshold, multinomial by the argmax of the margins."""
+    from pyspark.ml.classification import LogisticRegression as MLLogReg
+    from pyspark.ml.feature import VectorAssembler
+
+    cols = ["l_quantity", "l_discount"]
+    df = lineitem.selectExpr("l_orderkey", "l_linenumber", *cols, f"{label} AS lbl")
+    model = LogisticRegression(C=1.0, max_iter=50).fit(df, cols, "lbl")
+    n = df.count()
+    assembled = VectorAssembler(inputCols=cols, outputCol="f").transform(df)
+    ml = MLLogReg(featuresCol="f", labelCol="lbl", regParam=1.0 / n, maxIter=50,
+                  standardization=False).fit(assembled)
+    key = ["l_orderkey", "l_linenumber"]
+    ours = model.predict(df, cols).select(*key, "prediction").orderBy(*key).collect()
+    ref = ml.transform(assembled).select(*key, "prediction").orderBy(*key).collect()
+    assert ours == ref
+
+
 def test_get_set_params():
     m = Ridge(alpha=2.0)
     assert m.get_params()["alpha"] == 2.0

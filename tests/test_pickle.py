@@ -163,6 +163,29 @@ def test_pickle_fil(spark, xy):
         _rows(m2.predict(xy, COLS, out_col="score"), ["score"])
 
 
+@pytest.mark.parametrize("n_classes", [2, 3])
+def test_pickle_logreg_predicts(spark, xy, n_classes):
+    """A pickled LogisticRegression predicts from ``coef_``/``intercept_``
+    alone: the same labels as before the round trip, which are the
+    argmax of the margins (binary: margin > 0)."""
+    label = ((F.col("f0") > 0).cast("double") if n_classes == 2 else
+             F.when(F.col("f0") > 0.5, 2.0).when(F.col("f1") > 0, 1.0).otherwise(0.0))
+    df = xy.withColumn("cls", label)
+    m = LogisticRegression(C=1.0).fit(df, COLS, "cls")
+    m2 = _roundtrip(m)
+    assert m.coef_.shape == ((1, 3) if n_classes == 2 else (3, 3))
+    assert all(getattr(m2, k) is not None
+               for k in ("coef_", "intercept_", "classes_", "n_iter_"))
+    got = m2.predict(df, COLS).orderBy("id")
+    assert _rows(m.predict(df, COLS), ["id", "prediction"]) == \
+        _rows(got, ["id", "prediction"])
+    X = np.array([[r[c] for c in COLS] for r in got.collect()])
+    z = X @ m.coef_.T + m.intercept_
+    ref = (z[:, 0] > 0) if n_classes == 2 else z.argmax(axis=1)
+    np.testing.assert_array_equal(
+        [r.prediction for r in got.select("prediction").collect()], ref)
+
+
 # ---- save/load tier: DataFrame / JavaModel state --------------------------
 
 def test_saveload_random_forest(spark, xy, tmp_path):

@@ -172,23 +172,22 @@ def test_ngram_contamination_single_corpus_scan(spark):
 
 
 def test_right_size_coalesces_small_and_passes_large(spark):
-    """right_size (core/session.py) must shrink a tiny working set to few
-    partitions (the per-task overhead fix for iterative JVM fits) while
-    returning large-estimate frames untouched — the property that makes it
-    a no-op on a 100 TB input."""
+    """right_size (core/session.py) sizes a working set by its bytes alone:
+    a ~1 MB frame comes back as one partition (the per-task overhead fix
+    for iterative JVM fits), while a frame whose estimate exceeds
+    parts·16 MB comes back untouched — the property that makes it a no-op
+    on a 100 TB input."""
     from conftest import SF_UNIT
 
     from cuml_spark.core.session import ensure_parallelism, right_size
 
-    # an explicit partition count above right_size's floor: the session
-    # default alone can already equal the floor (4 cores)
     small = ensure_parallelism(
         spark.read.parquet(f"{SF_UNIT}/lineitem.parquet"), min_parts=32
     )
     before = small.rdd.getNumPartitions()
     after = right_size(small).rdd.getNumPartitions()
-    assert after < before  # ~1 MB over 32 partitions -> the floor (4)
-    assert after >= 4
+    assert after < before
+    assert after == 1  # ~1 MB at 16 MB per partition
     # a frame whose estimate exceeds parts*16MB must come back unchanged:
     # 32 partitions need >512MB of estimated input to all stay
     big = spark.range(0, 200_000_000, 1, 32).selectExpr(

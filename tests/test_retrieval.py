@@ -345,3 +345,42 @@ def test_tfidf_keywords_partitioning_invariant(spark):
             for r in tfidf_keywords(df.repartition(parts), k=3).collect())
         assert again == base
     assert base  # non-degenerate
+
+
+def test_chunk_corpus_stats_closed_form(spark):
+    """The retrieval pipeline's closed-form chunk stats equal what the
+    chunker emits and what bm25_topk's default aggregate computes over
+    the chunks: doc lengths around every chunk boundary, empty and null
+    texts and doubled separators included."""
+    from cuml_spark.harness_text import MAX_TOKENS, OVERLAP, _chunk_corpus_stats
+
+    step = MAX_TOKENS - OVERLAP
+    rows = [(n, " ".join(f"w{(n * 3 + j) % 17}" for j in range(n)))
+            for n in range(0, 3 * MAX_TOKENS + 2)]
+    rows += [(1000, None), (1001, "a  b   c"), (1002, " x " * (MAX_TOKENS + step))]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    chunks = chunk_documents(docs, MAX_TOKENS, overlap=OVERLAP)
+    got = _chunk_corpus_stats(docs).first()
+    want = chunks.agg(F.count("*"), F.avg("n_tokens")).first()
+    assert (got["__n"], got["__avgdl"]) == (want[0], want[1])
+
+    chunk_docs = chunks.select(
+        (F.col("doc_id") * 1000 + F.col("chunk_id")).alias("ck"),
+        F.col("chunk_text").alias("text"))
+    qs = spark.createDataFrame([(0, "w1 w5 x"), (1, "w16 b")], "query_id long, text string")
+
+    def ranked(**kw):
+        return sorted(tuple(r) for r in bm25_topk(
+            chunk_docs, qs, k=50, id_col="ck", score_decimals=None, **kw).collect())
+
+    default = ranked()
+    assert default and ranked(corpus_stats=_chunk_corpus_stats(docs)) == default
+
+
+def test_bm25_rejects_corpus_stats_without_columns(corpus, spark):
+    """A corpus_stats frame lacking __n or __avgdl fails at entry, from its
+    schema: the frame below raises if any job ever evaluates it."""
+    qs = spark.createDataFrame([(0, "apple")], "query_id long, text string")
+    bad = spark.range(1).selectExpr("CAST(raise_error('evaluated') AS LONG) AS __n")
+    with pytest.raises(ValueError, match="__avgdl"):
+        bm25_topk(corpus, qs, corpus_stats=bad)
