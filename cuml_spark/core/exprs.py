@@ -26,12 +26,13 @@ from __future__ import annotations
 import math
 from collections.abc import Iterable
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
-    "double_array_lit", "int_double_map_lit", "long_array_lit",
-    "sql_dot", "sql_double", "sql_double_col", "sql_ident",
+    "double_array_lit", "int_double_map_lit", "local_table", "long_array_lit",
+    "sql_dot", "sql_double", "sql_double_col", "sql_ident", "sql_typed",
 ]
 
 _NON_FINITE = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
@@ -55,6 +56,47 @@ def sql_double(v: float) -> str:
     if math.isfinite(v):
         return f"({v!r}D)"
     return f"CAST('{_NON_FINITE[repr(v)]}' AS DOUBLE)"
+
+
+def sql_typed(v: object, dtype: T.DataType) -> str:
+    """``v``, a value as Spark collects it for a column of ``dtype``, as a
+    SQL literal of exactly that type.  Strings travel as UTF-8 hex, so no
+    text needs escaping; integers keep every digit (exact past 2^53)."""
+    t = dtype.simpleString()
+    if v is None:
+        return f"CAST(NULL AS {t})"
+    if isinstance(dtype, T.DoubleType):
+        return sql_double(v)
+    if isinstance(dtype, T.LongType):
+        return f"{int(v)}L"
+    if isinstance(dtype, T.IntegralType):
+        return f"CAST({int(v)} AS {t})"
+    if isinstance(dtype, (T.StringType, T.BinaryType)):
+        raw = v.encode() if isinstance(v, str) else bytes(v)
+        return f"CAST(X'{raw.hex()}' AS {t})"
+    if isinstance(dtype, T.BooleanType):
+        return "TRUE" if v else "FALSE"
+    if isinstance(dtype, T.DecimalType):
+        return f"CAST('{v}' AS {t})"
+    if isinstance(dtype, T.FloatType):
+        return f"CAST({sql_double(v)} AS {t})"
+    if isinstance(dtype, T.DateType):
+        return f"DATE'{v.isoformat()}'"
+    if isinstance(dtype, T.TimestampType):
+        return f"TIMESTAMP_MICROS({dtype.toInternal(v)})"
+    raise TypeError(f"no SQL literal for a {t} value")
+
+
+def local_table(spark: SparkSession, schema: T.StructType,
+                rows: Iterable[tuple]) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order) as ONE parsed inline ``VALUES``
+    table: a LocalRelation, where ``spark.createDataFrame(list)``
+    parallelizes pickled rows into an RDD (more tasks wherever the table
+    is read or broadcast).  ``rows`` must not be empty."""
+    types = [f.dataType for f in schema.fields]
+    values = "), (".join(", ".join(map(sql_typed, r, types)) for r in rows)
+    names = ", ".join(sql_ident(f.name) for f in schema.fields)
+    return spark.sql(f"SELECT * FROM VALUES ({values}) AS t({names})")
 
 
 def sql_dot(start: str, terms: Iterable[str], weights: Iterable[float]) -> str:

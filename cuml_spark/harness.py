@@ -168,23 +168,20 @@ _QUANTILE_PROBS = (0.25, 0.5, 0.75, 0.9, 0.99)
 def q_quantile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalable EXACT quantiles (ops/quantiles.py), global + grouped in
     one report: iterative histogram refinement — each pass ONE
-    map-side-combined conditional-count scan with all ranks riding
-    together; never a global sort, never a sketch.  The grouped tier
-    (new in r11, per-l_returnflag — the per-domain/per-language
-    percentile-cut shape the curation tier needs at 100 TB) runs every
-    group's live ranks on the same scans via a broadcast scalar
-    intervals table (floor-cell classification, actual-min/max interval
-    stepping) and finishes with a row_number window hash-partitioned
-    per (group, rank) over only interval-resident rows.  percentile_disc
-    semantics (rank = ceil(p*n)), so DuckDB's quantile_disc twins both
-    tiers exactly — values are order statistics (elements of the
-    data), no rounding ambiguity beyond the 6dp report convention.
-    The two tiers run as two operator calls ON PURPOSE: the query is
-    the driver's only evidence for BOTH exact_quantiles (the batched
-    window final-selection path, r12) and grouped_exact_quantiles (the
-    windowed per-group path); a user wanting both results in one job
-    would union a lit('global') scope into the grouped call instead
-    (same scan count at 2x rows)."""
+    map-side-combined aggregation with all ranks riding together; never
+    a global sort, never a sketch.  Both tiers are the same routine: the
+    global one over no group columns, the grouped one per l_returnflag
+    (the per-domain/per-language percentile-cut shape the curation tier
+    needs at 100 TB).  Every live rank's interval travels in one
+    broadcast intervals table (floor-cell classification, actual-min/max
+    interval stepping), and a row_number window hash-partitioned per
+    (group, rank) over only interval-resident rows finishes it.
+    percentile_disc semantics (rank = ceil(p*n)), so DuckDB's
+    quantile_disc twins both tiers exactly — values are order statistics
+    (elements of the data), no rounding ambiguity beyond the 6dp report
+    convention.  The report calls both public entry points, the list
+    return of exact_quantiles and the DataFrame return of
+    grouped_exact_quantiles."""
     from cuml_spark.ops.quantiles import (exact_quantiles,
                                           grouped_exact_quantiles)
 

@@ -93,15 +93,12 @@ def _backfill_parts(spark: SparkSession, sf_dir: str, table: str) -> int:
     A 100 TB ingest derives thousands of partitions from the same rule
     (capped at cluster parallelism), so this is the guide §2.2 "size
     partitions to the data" rule, not a local[32] constant.
-    ``CUML_SPARK_STREAM_PARTS`` overrides for deployments that pin
-    their state-store count (it must stay FIXED across restarts of a
-    real checkpointed stream — these harness backfills are ephemeral).
+    These backfills are ephemeral, so the count may differ from run to
+    run; a real checkpointed stream must keep its state-store count
+    fixed across restarts.
     """
     import os
 
-    env = os.environ.get("CUML_SPARK_STREAM_PARTS")
-    if env:
-        return max(1, int(env))
     try:
         nbytes = os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
     except OSError:

@@ -7,11 +7,11 @@ refusals in jpeg.py.
 Decoder: SOF3 frames, 2–16 bit precision, 1 or 3 components (sampling
 factors all 1 — the interleave lossless encoders emit), predictors 1–7,
 point transform (Pt), restart intervals.  The entropy layer reuses
-baseline JPEG's machinery (`jpeg.build_huffman`, `jpeg._BitReader`):
-each sample codes the magnitude category SSSS through a DC-class
-Huffman table followed by SSSS extend-coded difference bits — exactly
-baseline DC coding, extended to SSSS = 16 (difference 32768, no extra
-bits, spec H.1.2.2).
+baseline JPEG's machinery (`jpeg.build_huffman`, `jpeg._BitReader`,
+`jpeg._BitWriter`): each sample codes the magnitude category SSSS
+through a DC-class Huffman table followed by SSSS extend-coded
+difference bits — exactly baseline DC coding, extended to SSSS = 16
+(difference 32768, no extra bits, spec H.1.2.2).
 
 Prediction (spec H.1.2.1): the first sample of the image — and of every
 restart interval — predicts ``1 << (P − Pt − 1)``; the rest of the
@@ -40,7 +40,7 @@ import struct
 
 import numpy as np
 
-from cuml_spark.multimodal.jpeg import _BitReader, build_huffman
+from cuml_spark.multimodal.jpeg import _BitReader, _BitWriter, build_huffman
 
 __all__ = ["decode_jpeg_lossless", "encode_jpeg_lossless"]
 
@@ -177,34 +177,6 @@ def decode_jpeg_lossless(buf: bytes) -> np.ndarray:
     return out.astype(dtype)
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        for i in range(nbits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc = 0
-                self.nbits = 0
-
-    def flush(self) -> None:
-        if self.nbits:
-            self.acc <<= (8 - self.nbits)
-            self.acc |= (1 << (8 - self.nbits)) - 1  # pad with 1s (spec F.1.2.3)
-            self.out.append(self.acc)
-            if self.acc == 0xFF:
-                self.out.append(0x00)
-            self.acc = 0
-            self.nbits = 0
-
-
 def _ssss(diff: int) -> int:
     return int(diff).bit_length() if diff >= 0 else int(-diff).bit_length()
 
@@ -288,10 +260,10 @@ def encode_jpeg_lossless(
                     diff = 32768  # category 16 (spec H.1.2.2)
                 s = _ssss(diff) if diff != 32768 else 16
                 code, nbits = codes[s]
-                wr.write(code, nbits)
+                wr.write_bits(code, nbits)
                 if 0 < s < 16:
                     v = diff if diff >= 0 else diff + (1 << s) - 1
-                    wr.write(v & ((1 << s) - 1), s)
+                    wr.write_bits(v & ((1 << s) - 1), s)
                 n_samples += 1
             restart_pending = False
     wr.flush()

@@ -4,57 +4,64 @@ cluster scale; the same refinement loop Spark's own
 ``approxQuantile`` forgoes for a Greenwald-Khanna sketch).  Unlike
 ``percentile_approx`` this returns the EXACT order statistic, and
 unlike SQL ``percentile_disc`` it never globally sorts: each pass is
-ONE map-side-combined conditional-count aggregation, so a 100 TB
-column costs a handful of full scans and zero shuffles of data rows —
-only tiny count frames ever move.
+ONE map-side-combined aggregation, so a 100 TB column costs a handful
+of full scans and zero shuffles of data rows — only tiny count frames
+ever move.
 
-Algorithm, per target rank k (1-based, ``ceil(p * n)`` — the SQL
+One routine serves both entry points: :func:`exact_quantiles` is the
+routine over no group columns, :func:`grouped_exact_quantiles` over one
+or more.  Per (group, rank) — rank k 1-based, ``ceil(p * n)``, the SQL
 ``percentile_disc`` / DuckDB ``quantile_disc`` convention, so the
-oracle can twin it):
+oracle can twin it — the state is the live interval ``[lo, hi]`` that
+holds the rank, the count of values strictly below ``lo`` and the
+count inside:
 
-1. one stats pass: n (non-null), min, max;
-2. refinement passes: split each rank's live interval ``[lo, hi]``
-   into ``n_buckets`` equal-width floor cells, aggregate every cell's
-   (count, min, max) for every rank in ONE aggregation (the cells for
-   all ranks ride the same scan), then step the interval to the
-   ACTUAL (min, max) of the cell containing the rank and add the
-   cells below to ``count_below`` — the executor's floor expression
-   is the single source of cell identity, so there is no driver edge
-   arithmetic for it to disagree with (the r10 1-ulp boundary trap is
-   structurally absent), and intervals shrink at least as fast as the
-   cell width;
-3. once a rank's live interval holds ≤ ``collect_threshold`` rows (or
-   collapses to a point / stops splitting at double resolution), the
-   remaining selection for ALL ranks runs as ONE job (r12 — previously
-   one TakeOrdered job per rank): a broadcast intervals table tags each
-   interval-resident row with its rank id and ``row_number`` over a
-   window hash-partitioned by rank id (never range-partitioned — no
-   global sort) picks each rank's needed-th smallest; only
-   interval-resident rows (≤ ranks × collect_threshold) ever shuffle.
+1. one stats pass, ``groupBy(*group_cols)`` (a global aggregate with
+   no group columns): n (non-null), min, max and a NaN/inf flag per
+   group;
+2. refinement passes: every live rank's interval travels in ONE
+   broadcast intervals table (a parsed ``VALUES`` relation — scalars
+   only) that tags each row with the intervals holding it, null-safe
+   on the group keys or a cross join when there are none.  Each row
+   lands in one of ``n_buckets`` equal-width floor cells of its
+   interval, and one aggregation counts every (rank, cell)'s (count,
+   min, max).  The next interval is the ACTUAL double-space (min, max)
+   of the cell holding the rank, and the cells below add to the count
+   below — the executor's floor expression is the single source of
+   cell identity, so no driver edge arithmetic exists for it to
+   disagree with (the 1-ulp boundary trap is structurally absent), and
+   intervals shrink at least as fast as the cell width;
+3. a rank leaves the loop once its interval holds ≤
+   ``collect_threshold`` rows or collapses to a point.  One that can
+   no longer split at double resolution FREEZES: its interval is a few
+   ulps wide but may hold a huge duplicate mass, so every frozen rank
+   resolves in one bounded distinct-value histogram job;
+4. the rest resolve in ONE selection: the surviving intervals tag
+   their rows and ``row_number`` over a window hash-partitioned by
+   rank id (never range-partitioned — no global sort) picks each
+   rank's needed-th smallest; only interval-resident rows (≤ ranks ×
+   collect_threshold) ever shuffle.
 
 Determinism: counts are exact integers; cell identity is one pure
 double expression of (value, lo, width) evaluated only on executors;
-intervals are actual data extremes; the final order statistic is an
-element OF the data, identical on any partitioning.  NULLs are
-excluded (SQL aggregate convention); NaNs are rejected up front (they
-poison value comparisons in any engine).
+intervals are actual data extremes; the result is an element OF the
+data, identical on any partitioning.  NULLs are excluded (SQL
+aggregate convention); NaN/inf are rejected up front (they poison
+value comparisons and make every cell width degenerate).
 
-Integral columns beyond 2^53: classification stays EXACT even though
-the interval edges live in double space, because the long→double cast
-is monotone non-decreasing — v1 <= v2 implies double(v1) <=
-double(v2), so every "values strictly below edge" set counted on the
-executors is prefix-closed in NATIVE order, and the final selection
-orders native values inside the surviving interval.  The returned
-value is therefore the native element itself (int for integral
-columns, float otherwise) — an earlier ``float(v)`` conversion was the
-one place a >2^53 long lost exactness (ADVICE r10).
+Integral columns beyond 2^53 stay EXACT although the interval edges
+live in double space: the long→double cast is monotone non-decreasing,
+so every "values strictly below edge" set counted on the executors is
+prefix-closed in NATIVE order, and the final selection orders native
+values inside the surviving interval.  The returned value is the
+native element itself (int for integral columns, float otherwise).
 
 Worst case: values concentrated so a cell never shrinks below the
-threshold (massive duplicate mass) — then the interval collapses to a
-single point in ≤ 1 extra pass (duplicates ARE the answer) since equal
-values all land in one cell of zero width.  ``max_passes`` guards the
-loop; on exhaustion the final selection runs with whatever interval
-remains (still exact, just a bigger shuffle).
+threshold (massive duplicate mass) — the interval collapses to a single
+point in ≤ 1 extra pass (duplicates ARE the answer) since equal values
+all land in one cell of zero width.  ``max_passes`` guards the loop; on
+exhaustion the final selection runs with whatever interval remains
+(still exact, just a bigger shuffle).
 
 No cuML counterpart (dense-matrix data model); first-class here like
 the sketch tier (ops/hll.py, ops/cms.py).
@@ -64,8 +71,13 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                               StructField, StructType)
+from pyspark.sql.window import Window
+
+from cuml_spark.core.exprs import local_table
 
 __all__ = ["exact_quantiles", "grouped_exact_quantiles"]
 
@@ -79,201 +91,21 @@ def exact_quantiles(
     collect_threshold: int = 100_000,
     max_passes: int = 16,
 ) -> list[tuple[float, float | int | None]]:
-    """→ ``[(p, value), ...]`` where ``value`` is the EXACT
-    ``percentile_disc(p)`` order statistic of ``df[col]`` (the element
-    at 1-based rank ``ceil(p * n)`` over non-null values) in the
+    """→ ``[(p, value), ...]`` in ``probs`` order, where ``value`` is the
+    EXACT ``percentile_disc(p)`` order statistic of ``df[col]`` (the
+    element at 1-based rank ``ceil(p * n)`` over non-null values) in the
     column's NATIVE python type (int for integral columns — exact past
     2^53 — float otherwise), or None for an all-null/empty column.  See
     the module docstring for the scan shape; total cost ≈ ``2 +
     passes`` full scans regardless of data size, with only
     O(n_buckets × len(probs)) counts ever leaving the executors."""
-    if not probs:
-        raise ValueError("probs must be non-empty")
-    for p in probs:
-        if not (0.0 < p <= 1.0):
-            raise ValueError(f"each prob must be in (0, 1], got {p}")
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    c = F.col(col)
-    base = df.select(c.alias("__v")).where(F.col("__v").isNotNull())
-    vd = F.col("__v").cast("double")
-    stats = base.agg(
-        F.count("*").alias("n"),
-        F.min("__v").alias("mn"),
-        F.max("__v").alias("mx"),
-        F.max((F.isnan(vd) | (F.abs(vd) == float("inf"))).cast("int")).alias(
-            "has_nonfinite"
-        ),
-    ).first()
-    n = stats["n"]
-    if n == 0:
-        return [(p, None) for p in probs]
-    if stats["has_nonfinite"]:
-        # NaN poisons comparisons; +/-inf makes every bucket width
-        # degenerate (the interval [lo, inf] never shrinks) — both are
-        # data bugs at the quantile layer, so refuse loudly
-        raise ValueError(f"column {col!r} contains NaN/inf — filter it first")
-    if float(stats["mx"]) - float(stats["mn"]) == float("inf"):
-        # finite sentinels like +/-1e308 make every bucket width overflow
-        # to inf (edges would be NaN) — refuse with a real error instead
-        # of a downstream crash
-        raise ValueError(
-            f"column {col!r} spans a range wider than a double "
-            f"({stats['mn']} .. {stats['mx']}) — rescale or filter first"
-        )
-    # state per rank: (k, lo, hi, below, cnt, frozen) — the k-th smallest
-    # overall lies in [lo, hi] with exactly `below` values strictly below
-    # lo and `cnt` values inside; `frozen` marks double-resolution
-    # exhaustion (the interval is a few ulps wide but may still hold a
-    # huge duplicate mass — resolved exactly by the final selection,
-    # NEVER by returning a computed edge that need not be a data value)
-    state = {}
-    for p in probs:
-        k = max(1, math.ceil(p * n))
-        state[p] = (k, float(stats["mn"]), float(stats["mx"]), 0, n, False)
-    for _ in range(max_passes):
-        live = {
-            p: s
-            for p, s in state.items()
-            if s[1] < s[2] and s[4] > collect_threshold and not s[5]
-        }
-        if not live:
-            break
-        # ONE aggregation carrying every live rank's cell histogram:
-        # bucket = clamped floor on the DOUBLE cast — plain codegen
-        # arithmetic — and the NEXT interval is the chosen cell's
-        # ACTUAL double-space (min, max), aggregated alongside the
-        # count.  The r10 1-ulp trap (floor classification vs
-        # driver-computed edges lo + i*w disagreeing within a ulp of a
-        # boundary — a replayed failure) is structurally absent in this
-        # shape: no driver edge arithmetic exists for the executor to
-        # disagree with; the floor expression is the single source of
-        # cell identity, a floor cell is an interval in double space
-        # (floor of a non-decreasing function), and its count/min/max
-        # come from the same grouping, so next-pass membership
-        # [mn, mx] selects exactly the cell's rows.  (An earlier
-        # edges-array + higher-order-filter variant evaluated the
-        # lambda INTERPRETED — HOFs are codegen-incompatible; the
-        # grouped twin measured 10.3 s/pass vs ~1 s after this
-        # rewrite.)  The bucket index is STAGED in its own projection
-        # so it evaluates once per (row, rank), and counts go
-        # LONG-FORM — stack to (rank_j, bucket) then ONE map-side-
-        # combined groupBy over <= live x n_buckets keys — instead of
-        # live x n_buckets sum() columns, whose codegen COMPILE time
-        # (~seconds for hundreds of aggregates) would dwarf the scan.
-        bucket_cols = []
-        live_js = {}
-        for j, (p, (k, lo, hi, below, cnt, _f)) in enumerate(live.items()):
-            w = (hi - lo) / n_buckets
-            if w <= 0 or lo + w == lo:  # double resolution exhausted —
-                # freeze, stay exact via the final selection
-                state[p] = (k, lo, hi, below, cnt, True)
-                continue
-            live_js[p] = j
-            bucket_cols.append(
-                F.when(
-                    (vd >= lo) & (vd <= hi),
-                    F.least(
-                        F.floor((vd - F.lit(lo)) / F.lit(w)),
-                        F.lit(n_buckets - 1),
-                    ).cast("int"),
-                ).alias(f"b_{j}")
-            )
-        if not bucket_cols:
-            break
-        staged = base.select(*bucket_cols, vd.alias("__vd"))
-        stack_expr = "stack({}, {}) AS (j, b)".format(
-            len(live_js), ", ".join(f"{j}, b_{j}" for j in live_js.values())
-        )
-        cells = {
-            (r["j"], r["b"]): (r["c"], r["mn"], r["mx"])
-            for r in staged.select(F.expr(stack_expr), "__vd")
-            .where(F.col("b").isNotNull())
-            .groupBy("j", "b")
-            .agg(F.count("*").alias("c"),
-                 F.min("__vd").alias("mn"),
-                 F.max("__vd").alias("mx"))
-            .collect()
-        }
-        for p, j in live_js.items():
-            k, lo, hi, below, cnt, _f = state[p]
-            cum = below
-            for i in range(n_buckets):
-                ci, mn_i, mx_i = cells.get((j, i), (0, None, None))
-                if cum + ci >= k:
-                    state[p] = (k, mn_i, mx_i, cum, ci, False)
-                    break
-                cum += ci
-            else:  # pragma: no cover — counts must reach k by construction
-                raise AssertionError("rank fell outside its interval")
-    # final selection: ALL ranks resolve in ONE distributed-selection job
-    # (r12 — previously one TakeOrderedAndProject job PER rank, i.e. one
-    # extra full scan per prob): a broadcast intervals table tags each
-    # interval-resident row with its rank id, and row_number over a
-    # window hash-partitioned by rank id picks each rank's needed-th
-    # smallest — the grouped twin's final-selection shape.  Only
-    # interval-resident rows (<= len(probs) × collect_threshold by the
-    # loop invariant) ever shuffle; ties order arbitrarily under
-    # row_number but the VALUE at the needed-th position is a property
-    # of the multiset, so the result is deterministic.  The comparison
-    # semantics are unchanged: the same (__v >= lo) & (__v <= hi)
-    # predicate as before, with lo/hi double literals.
-    resolved: dict[float, object] = {}
-    sel_rows = []
-    for j, p in enumerate(probs):
-        k, lo, hi, below, cnt, frozen = state[p]
-        needed = k - below
-        rng = (F.col("__v") >= lo) & (F.col("__v") <= hi)
-        if needed > collect_threshold:
-            # only reachable frozen (or at max_passes on pathological
-            # data): the interval is a few ulps wide, so its DISTINCT
-            # value set is tiny — <= n_buckets + 1 representable doubles
-            # when frozen (for integral columns a few double-ulps still
-            # bound it: <= ~n_buckets × ulp(lo) longs, e.g. ~64k at
-            # magnitude 2^62) — resolve by a bounded value histogram
-            # instead of a needed-sized selection
-            rows = sorted(
-                (r["__v"], r["c"])
-                for r in base.where(rng)
-                .groupBy("__v")
-                .agg(F.count("*").alias("c"))
-                .collect()
-            )
-            cum = below
-            v = None
-            for val, c2 in rows:
-                if cum + c2 >= k:
-                    v = val
-                    break
-                cum += c2
-            resolved[p] = v
-            continue
-        sel_rows.append((j, float(lo), float(hi), int(needed)))
-    if sel_rows:
-        from pyspark.sql.window import Window
-
-        spark = df.sparkSession
-        iv = F.broadcast(spark.createDataFrame(
-            sel_rows, "__j int, __lo double, __hi double, __needed long"
-        ))
-        w = Window.partitionBy("__j").orderBy(F.col("__v").asc())
-        hits = (
-            base.join(
-                iv,
-                (F.col("__v") >= F.col("__lo"))
-                & (F.col("__v") <= F.col("__hi")),
-            )
-            .select("__j", "__v", "__needed")
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == F.col("__needed"))
-            .select("__j", "__v")
-            .collect()
-        )
-        by_j = {r["__j"]: r["__v"] for r in hits}
-        for j, p in enumerate(probs):
-            if p not in resolved:
-                resolved[p] = by_j.get(j)
-    return [(p, resolved[p]) for p in probs]
+    _, hits, static = _quantiles(df, col, probs, [], n_buckets=n_buckets,
+                                 collect_threshold=collect_threshold,
+                                 max_passes=max_passes)
+    found = dict(static)
+    if hits is not None:
+        found.update((r["p"], r["value"]) for r in hits.collect())
+    return [(p, found[p]) for p in probs]
 
 
 def grouped_exact_quantiles(
@@ -287,42 +119,39 @@ def grouped_exact_quantiles(
     max_passes: int = 16,
     max_groups: int = 100_000,
 ) -> DataFrame:
-    """Per-group EXACT ``percentile_disc`` quantiles — the grouped twin
-    of :func:`exact_quantiles` for per-domain / per-language percentile
-    cuts (CCNet perplexity buckets, per-stratum length caps): →
-    DataFrame(group_cols…, p, value) with one row per (group, prob),
-    ``value`` in the column's native type (NULL for all-null groups,
-    matching SQL ``GROUP BY`` aggregate semantics).
-
-    Same refinement loop as the global version, with every group's
-    live ranks riding ONE scan per pass: a broadcast intervals table
-    (group → (lo, hi, width), driver-built, ≤ groups × ranks tiny
-    rows — scalars only, never an array payload) equi-joins the data
-    null-safely; bucket membership is plain codegen floor arithmetic
-    on the DOUBLE cast, and the pass aggregates long-form
-    (rank, bucket) → (count, min, max) cells — map-side combined,
-    bounded at groups × ranks × n_buckets rows.  The next interval is
-    the chosen cell's ACTUAL double-space min/max, so no driver edge
-    arithmetic exists for the executor to disagree with (the global
-    version's 1-ulp floor-vs-edges trap is structurally absent: a
-    floor cell is an interval in double space, and its count/min/max
-    come from the same grouping).  Integral columns stay exact past
-    2^53 by the same monotone-cast prefix-closure argument as the
-    global version — all bookkeeping lives in double space and the
-    final selection orders native values.  The final
-    selection broadcast-joins the surviving intervals and takes each
-    (group, rank)'s needed-th smallest via ``row_number`` over a
-    window partitioned by (group, rank) — only interval-resident rows
-    (≤ groups × ranks × collect_threshold) ever shuffle, hash-
-    partitioned, never range-partitioned (no global sort).  Frozen
-    duplicate masses larger than ``collect_threshold`` resolve through
-    the bounded distinct-value histogram exactly like the global path.
+    """Per-group EXACT ``percentile_disc`` quantiles, for per-domain /
+    per-language percentile cuts (CCNet perplexity buckets, per-stratum
+    length caps): → DataFrame(group_cols…, p, value) with one row per
+    (group, distinct prob), ``value`` in the column's native type (NULL
+    for all-null groups, SQL ``GROUP BY`` semantics; a NULL key is its
+    own group).  Every group's live ranks ride the same scans, so the
+    pass count is that of the slowest group, not the sum.
 
     Driver-bounded contract: per-group states live on the driver —
-    ``max_groups`` guards the collect (the text/dsir.py bounded-fit
-    convention).  Designed for stratum-grade cardinality (languages,
-    domains, quality buckets), not data-grade keys.
+    ``max_groups`` guards the stats collect (the text/dsir.py
+    bounded-fit convention).  Designed for stratum-grade cardinality
+    (languages, domains, quality buckets), not data-grade keys.
     """
+    if not group_cols:
+        raise ValueError("group_cols must be non-empty (use exact_quantiles)")
+    fields, hits, static = _quantiles(
+        df, col, probs, list(group_cols), n_buckets=n_buckets,
+        collect_threshold=collect_threshold, max_passes=max_passes,
+        max_groups=max_groups)
+    out_schema = StructType(
+        [StructField(f.name, f.dataType, True) for f in fields[:-1]]
+        + [StructField("p", DoubleType(), False),
+           StructField("value", fields[-1].dataType, True)])
+    static_df = df.sparkSession.createDataFrame(static, out_schema)
+    return static_df if hits is None else hits.unionByName(static_df)
+
+
+def _quantiles(df, col, probs, gcols, *, n_buckets, collect_threshold,
+               max_passes, max_groups=None):
+    """The one distributed selection over ``gcols`` (possibly empty) →
+    (schema fields of (gcols…, value), the lazy final-selection frame of
+    (gcols…, p, value) or None, rows (gcols…, p, value) resolved on the
+    driver — all-null groups and frozen duplicate masses)."""
     if not probs:
         raise ValueError("probs must be non-empty")
     for p in probs:
@@ -330,211 +159,147 @@ def grouped_exact_quantiles(
             raise ValueError(f"each prob must be in (0, 1], got {p}")
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    gcols = list(group_cols)
-    if not gcols:
-        raise ValueError("group_cols must be non-empty (use exact_quantiles)")
     if col in gcols:
         raise ValueError(f"col {col!r} cannot also be a group column")
-    from pyspark.sql.types import (DoubleType, IntegerType, LongType,
-                                   StructField, StructType)
-    from pyspark.sql.window import Window
-
-    spark = df.sparkSession
     probs = sorted(set(probs))
-    c = F.col(col)
-    base = df.select(*gcols, c.alias("__v")).where(F.col("__v").isNotNull())
     vd = F.col("__v").cast("double")
-    stats_rows = (
-        df.select(*gcols, c.alias("__v"))
-        .groupBy(*gcols)
-        .agg(
-            F.count("__v").alias("n"),  # count(col): nulls excluded
-            F.min("__v").alias("mn"),
-            F.max("__v").alias("mx"),
-            # NULL __v rows propagate null into the flag and max skips
-            # them, so an all-null group reports has_nonfinite = null
-            F.max(
-                (F.isnan(vd) | (F.abs(vd) == float("inf"))).cast("int")
-            ).alias("has_nonfinite"),
-        )
-        # the guard must bound the TRANSFER, not inspect it after the
-        # fact: limit(max_groups + 1) makes Spark plan a CollectLimit,
-        # so a data-grade key (10^8 doc_ids) ships max_groups + 1 rows
-        # to the driver instead of OOMing it before the check fires
-        .limit(int(max_groups) + 1)
-        .collect()
+    projected = df.select(*gcols, F.col(col).alias("__v"))
+    fields = projected.schema.fields
+    base = projected.where(F.col("__v").isNotNull())
+    stats = projected.groupBy(*gcols).agg(
+        F.count("__v").alias("n"),  # count(col): nulls excluded
+        F.min("__v").alias("mn"),
+        F.max("__v").alias("mx"),
+        # NULL __v rows propagate null into the flag and max skips them
+        F.max((F.isnan(vd) | (F.abs(vd) == float("inf"))).cast("int"))
+        .alias("has_nonfinite"),
     )
-    if len(stats_rows) > max_groups:
+    if gcols:
+        # the guard must bound the TRANSFER, not inspect it after the
+        # fact: limit(max_groups + 1) plans a CollectLimit, so a
+        # data-grade key ships max_groups + 1 rows, never 10^8
+        stats = stats.limit(int(max_groups) + 1)
+    stats_rows = stats.collect()
+    if gcols and len(stats_rows) > max_groups:
         raise ValueError(
             f"more than max_groups={max_groups} groups — grouped "
             "quantiles keep per-group state on the driver; raise "
             "max_groups only if that state genuinely fits"
         )
-    group_fields = [
-        StructField(f.name, f.dataType, True)
-        for f in df.select(*gcols).schema.fields
-    ]
-    value_type = df.select(c.alias("__v")).schema.fields[0].dataType
-    out_schema = StructType(
-        group_fields
-        + [StructField("p", DoubleType(), False),
-           StructField("value", value_type, True)]
-    )
-    # state per (group, prob): (k, lo, hi, below, cnt, frozen) — the
-    # global version's invariant, one instance per group
+    # state per (group key, p): [k, lo, hi, below, cnt, frozen] — rank k
+    # lies in [lo, hi] with exactly `below` values strictly below lo and
+    # `cnt` inside; `frozen` marks double-resolution exhaustion, resolved
+    # exactly by the value histogram, NEVER by a computed edge
     state: dict = {}
-    static_out: list[tuple] = []
+    static: list[tuple] = []
     for r in stats_rows:
         gk = tuple(r[g] for g in gcols)
+        where = f" in group {gk!r}" if gcols else ""
         if r["n"] == 0:
-            static_out.extend((*gk, p, None) for p in probs)
+            static.extend((*gk, p, None) for p in probs)
             continue
         if r["has_nonfinite"]:
             raise ValueError(
-                f"column {col!r} contains NaN/inf in group {gk!r} — "
-                "filter it first"
-            )
-        if float(r["mx"]) - float(r["mn"]) == float("inf"):
+                f"column {col!r} contains NaN/inf{where} — filter it first")
+        lo, hi = float(r["mn"]), float(r["mx"])
+        if hi - lo == float("inf"):
+            # finite sentinels like ±1e308 overflow every cell width
             raise ValueError(
-                f"column {col!r} spans a range wider than a double in "
-                f"group {gk!r} ({r['mn']} .. {r['mx']}) — rescale first"
-            )
+                f"column {col!r} spans a range wider than a double{where} "
+                f"({r['mn']} .. {r['mx']}) — rescale or filter first")
         for p in probs:
-            k = max(1, math.ceil(p * r["n"]))
-            state[(gk, p)] = (k, float(r["mn"]), float(r["mx"]), 0,
-                              r["n"], False)
-    edge_schema = StructType(
-        group_fields
-        + [StructField("__j", IntegerType(), False),
-           StructField("__lo", DoubleType(), False),
-           StructField("__hi", DoubleType(), False),
-           StructField("__w", DoubleType(), False)]
-    )
+            state[(gk, p)] = [max(1, math.ceil(p * r["n"])), lo, hi, 0,
+                              r["n"], False]
+
+    keys = [StructField(f"__g{i}", f.dataType)
+            for i, f in enumerate(fields[:-1])]
+
+    def tag(rows, *cols):
+        """``base`` rows joined to the intervals that hold them: ``rows``
+        are (rank id, state key, lo, hi, values of the (name, type)
+        ``cols``), shipped as one parsed VALUES table and broadcast."""
+        schema = StructType(keys + [
+            StructField(n, t) for n, t in [("__j", IntegerType()),
+                                           ("__lo", DoubleType()),
+                                           ("__hi", DoubleType()), *cols]])
+        iv = local_table(df.sparkSession, schema,
+                         [(*key[0], j, *vals) for j, key, *vals in rows])
+        cond = (vd >= F.col("__lo")) & (vd <= F.col("__hi"))
+        for g, key in zip(gcols, keys):
+            cond = cond & F.col(g).eqNullSafe(F.col(key.name))
+        return base.join(F.broadcast(iv), cond)
+
+    def histogram(tagged, key, *aggs):
+        """Per rank id, its (__j, key, c, aggs…) rows in key order."""
+        per_j: dict = {}
+        rows = (tagged.groupBy("__j", key)
+                .agg(F.count("*").alias("c"), *aggs).collect())
+        for r in sorted(rows, key=lambda r: r[1]):
+            per_j.setdefault(r["__j"], []).append(r)
+        return per_j
+
     for _ in range(max_passes):
-        live = {
-            key: s for key, s in state.items()
-            if s[1] < s[2] and s[4] > collect_threshold and not s[5]
-        }
-        if not live:
-            break
-        edge_rows = []
-        jmap = {}
-        for j, (key, (k, lo, hi, below, cnt, _f)) in enumerate(live.items()):
+        rows = []
+        for j, (key, s) in enumerate(state.items()):
+            k, lo, hi, below, cnt, frozen = s
+            if frozen or lo >= hi or cnt <= collect_threshold:
+                continue
             w = (hi - lo) / n_buckets
             if w <= 0 or lo + w == lo:  # double resolution exhausted
-                state[key] = (k, lo, hi, below, cnt, True)  # freeze
+                s[5] = True
                 continue
-            jmap[key] = j
-            edge_rows.append((*key[0], j, lo, hi, w))
-        if not edge_rows:
+            rows.append((j, key, lo, hi, w))
+        if not rows:
             break
-        ed = F.broadcast(spark.createDataFrame(edge_rows, edge_schema))
-        cond = [base[g].eqNullSafe(ed[g]) for g in gcols]
-        joined = base.join(ed, cond)
-        # bucket = clamped floor on the DOUBLE cast — plain codegen
-        # arithmetic (an earlier edges-array + higher-order-filter
-        # variant shipped a 63-double payload through the join and
-        # evaluated the lambda INTERPRETED — measured 10.3 s/pass vs
-        # ~1 s for this shape at sf0.1).  The global version's
-        # floor-vs-driver-edges 1-ulp trap does not apply: the next
-        # interval is the chosen cell's ACTUAL min/max below, so the
-        # floor expression is the single source of cell identity.
-        vdj = F.col("__v").cast("double")
-        staged = joined.select(
-            F.col("__j"),
-            F.when(
-                (vdj >= F.col("__lo")) & (vdj <= F.col("__hi")),
-                F.least(
-                    F.floor((vdj - F.col("__lo")) / F.col("__w")),
-                    F.lit(n_buckets - 1),
-                ).cast("int"),
-            ).alias("__b"),
-            vdj.alias("__vd"),
-        )
-        cells = {
-            (r["__j"], r["__b"]): (r["c"], r["mn"], r["mx"])
-            for r in staged.where(F.col("__b").isNotNull())
-            .groupBy("__j", "__b")
-            .agg(F.count("*").alias("c"),
-                 F.min("__vd").alias("mn"),
-                 F.max("__vd").alias("mx"))
-            .collect()
-        }
-        for key, j in jmap.items():
-            k, lo, hi, below, cnt, _f = state[key]
-            cum = below
-            for i in range(n_buckets):
-                ci, mn_i, mx_i = cells.get((j, i), (0, None, None))
-                if cum + ci >= k:
-                    # the cell's ACTUAL double-space extremes become the
-                    # next interval: a floor cell is an interval in
-                    # double space, so [mn_i, mx_i] membership in the
-                    # next pass selects exactly this cell's rows
-                    state[key] = (k, mn_i, mx_i, cum, ci, False)
-                    break
-                cum += ci
-            else:  # pragma: no cover — counts must reach k
-                raise AssertionError("rank fell outside its interval")
-    # final selection: distributed needed-th-smallest for every
-    # (group, rank) in ONE job; frozen over-threshold masses resolve
-    # via the bounded distinct-value histogram (a second small job)
-    iv_schema = StructType(
-        group_fields
-        + [StructField("__j", IntegerType(), False),
-           StructField("__lo", DoubleType(), False),
-           StructField("__hi", DoubleType(), False),
-           StructField("__needed", LongType(), False),
-           StructField("__p", DoubleType(), False)]
-    )
-    sel_rows, frozen_rows = [], []
-    fmeta = {}
-    for j, (key, (k, lo, hi, below, cnt, frozen)) in enumerate(state.items()):
-        needed = k - below
-        if needed > collect_threshold:
-            frozen_rows.append((*key[0], j, lo, hi, needed, key[1]))
-            fmeta[j] = key
+        # the bucket is a clamped floor on the DOUBLE cast — plain codegen
+        # arithmetic; counts go long-form, one map-side-combined groupBy
+        # over <= live ranks x n_buckets keys
+        bucket = F.least(F.floor((vd - F.col("__lo")) / F.col("__w")),
+                         F.lit(n_buckets - 1)).cast("int").alias("__b")
+        cells = histogram(tag(rows, ("__w", DoubleType())), bucket,
+                          F.min(vd).alias("mn"), F.max(vd).alias("mx"))
+        for j, key, *_ in rows:
+            s = state[key]
+            # a floor cell is an interval in double space, so the chosen
+            # cell's ACTUAL [mn, mx] selects exactly its rows next pass
+            s[3], cell = _locate(s[0], s[3], cells[j])
+            s[1], s[2], s[4] = cell["mn"], cell["mx"], cell["c"]
+
+    sel, frozen_rows = [], []
+    for j, (key, (k, lo, hi, below, _c, _f)) in enumerate(state.items()):
+        if k - below > collect_threshold:
+            # only reachable frozen (or at max_passes on pathological
+            # data): a few-ulp interval holds few DISTINCT values (<=
+            # n_buckets + 1 doubles; for longs ~n_buckets x ulp(lo))
+            frozen_rows.append((j, key, lo, hi))
         else:
-            sel_rows.append((*key[0], j, lo, hi, needed, key[1]))
+            sel.append((j, key, lo, hi, k - below, key[1]))
     if frozen_rows:
-        fv = F.broadcast(spark.createDataFrame(frozen_rows, iv_schema))
-        cond = [base[g].eqNullSafe(fv[g]) for g in gcols]
-        hist = (
-            base.join(fv, cond)
-            .where((F.col("__v") >= F.col("__lo"))
-                   & (F.col("__v") <= F.col("__hi")))
-            .groupBy("__j", "__v")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        )
-        per_j: dict = {}
-        for r in hist:
-            per_j.setdefault(r["__j"], []).append((r["__v"], r["c"]))
-        for j, key in fmeta.items():
-            k, lo, hi, below, cnt, frozen = state[key]
-            cum = below
-            v = None
-            for val, c2 in sorted(per_j.get(j, [])):
-                if cum + c2 >= k:
-                    v = val
-                    break
-                cum += c2
-            static_out.append((*key[0], key[1], v))
-    if sel_rows:
-        iv = F.broadcast(spark.createDataFrame(sel_rows, iv_schema))
-        cond = [base[g].eqNullSafe(iv[g]) for g in gcols]
-        w = Window.partitionBy("__j").orderBy(F.col("__v").asc())
+        hist = histogram(tag(frozen_rows), "__v")
+        for j, key, *_ in frozen_rows:
+            k, _lo, _hi, below, _c, _f = state[key]
+            static.append(
+                (*key[0], key[1], _locate(k, below, hist[j])[1]["__v"]))
+    hits = None
+    if sel:
+        # ties order arbitrarily under row_number, but the VALUE at the
+        # needed-th position is a property of the multiset
         hits = (
-            base.join(iv, cond)
-            .where((F.col("__v") >= F.col("__lo"))
-                   & (F.col("__v") <= F.col("__hi")))
-            .select(*[iv[g].alias(g) for g in gcols], "__j", "__p", "__v",
-                    "__needed")
-            .withColumn("__rn", F.row_number().over(w))
+            tag(sel, ("__needed", LongType()), ("__p", DoubleType()))
+            .withColumn("__rn", F.row_number().over(
+                Window.partitionBy("__j").orderBy(F.col("__v").asc())))
             .where(F.col("__rn") == F.col("__needed"))
             .select(*gcols, F.col("__p").alias("p"),
                     F.col("__v").alias("value"))
         )
-    else:
-        hits = spark.createDataFrame([], out_schema)
-    static = spark.createDataFrame(static_out, out_schema)
-    return hits.unionByName(static)
+    return fields, hits, static
+
+
+def _locate(k: int, below: int, cells: list[Row]) -> tuple[int, Row]:
+    """The cell of ``cells`` (in value order, ``below`` values under the
+    first) that holds rank k → (values below that cell, the cell)."""
+    for cell in cells:
+        if below + cell["c"] >= k:
+            return below, cell
+        below += cell["c"]
+    raise AssertionError("rank fell outside its interval")  # pragma: no cover

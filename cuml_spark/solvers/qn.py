@@ -81,8 +81,4 @@ class QN(Base):
     def predict(self, df: DataFrame, out_col: str = "prediction") -> DataFrame:
         if self._impl is None:
             raise RuntimeError("fit() first")
-        from cuml_spark.solvers.cd import CD
-
-        if isinstance(self._impl, CD):
-            return self._impl.predict(df, out_col)
         return self._impl.predict(df, out_col=out_col)

@@ -236,8 +236,11 @@ def jaccard_similarity_pairs(df: DataFrame, k: int = 5, threshold: float = 0.0,
             )
         )
         return out.where(F.col("jaccard") >= threshold) if threshold > 0 else out
-    # no candidates: all pairs sharing ≥1 shingle via the (guarded) self-join
-    sh = shingles(df, k=k, text_col=text_col, id_col=id_col).cache()
+    # no candidates: all pairs sharing ≥1 shingle via the (guarded) self-join.
+    # The shingles are read three times (both join sides and the sizes): a
+    # lazy local checkpoint computes them once for this call only, where a
+    # cache() would stay in the CacheManager for any later matching plan
+    sh = shingles(df, k=k, text_col=text_col, id_col=id_col).localCheckpoint(eager=False)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     inter = (
         sh.alias("a").join(sh.alias("b"), on="shingle")

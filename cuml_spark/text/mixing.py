@@ -111,7 +111,7 @@ def stratified_length_cap(
     length type) — the refinement runs ONCE either way.
 
     Keeps rows with ``length_col <= percentile_disc(p)`` OF THEIR OWN
-    domain (grouped_exact_quantiles — ops/quantiles.py:249; exact, not
+    domain (ops/quantiles.py grouped_exact_quantiles; exact, not
     approxQuantile: a 0.99 cut that drifts by even one rank on a skewed
     domain moves the packing budget by whole documents).  NULL lengths
     drop (no position in the distribution); a NULL domain is its own

@@ -151,6 +151,55 @@ def test_jaccard_lazy_candidates_computed_once(spark, docs):
     assert lazy_jobs <= jobs and lazy_tasks <= tasks
 
 
+def test_jaccard_all_pairs_leaves_no_cache(spark, docs):
+    """Without candidates the shingle frame is materialized for the call
+    only: the CacheManager holds no copy of it, and once the result is
+    dropped no persistent RDD the call made remains."""
+    import gc
+    import time
+
+    from cuml_spark.text.dedup import jaccard_similarity_pairs, shingles
+
+    sc = spark.sparkContext
+
+    def persistent():
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
+    assert jaccard_similarity_pairs(docs).count() > 0
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.lookupCachedData(shingles(docs)._jdf).isEmpty()
+    deadline = time.monotonic() + 60
+    while persistent() - before and time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+    assert not persistent() - before
+
+
+@pytest.mark.parametrize("grouped", [False, True])
+def test_exact_quantiles_budget(spark, grouped):
+    """An exact-quantile call is a stats scan, one scan per refinement
+    pass and one selection scan: at sf0.001 with a 1,000-row threshold
+    one pass runs.  Jobs: the stats aggregate (2), the pass (2 plus the
+    intervals broadcast) and the selection (2 plus its broadcast)."""
+    from cuml_spark.ops.quantiles import exact_quantiles, grouped_exact_quantiles
+
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
+    probs = [0.01, 0.25, 0.5, 0.75, 0.99]
+    args = dict(n_buckets=64, collect_threshold=1_000)
+    if grouped:
+        def fn():
+            return grouped_exact_quantiles(
+                li, "l_extendedprice", probs, ["l_returnflag"], **args).collect()
+    else:
+        def fn():
+            return exact_quantiles(li, "l_extendedprice", probs, **args)
+    out, jobs, scans, tasks = spark_budget(spark, fn, f"budget/quantiles/{grouped}")
+    assert len(out) == (15 if grouped else 5)
+    assert (jobs, scans, tasks) == ((8, 3, 18) if grouped else (8, 3, 14))
+
+
 # -- ml tier ------------------------------------------------------------------
 
 D = 32

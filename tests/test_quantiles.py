@@ -88,22 +88,89 @@ def test_exact_quantiles_property(spark, vals, probs, buckets, thresh):
         assert got[p] == _disc(s, p), (p, got[p], _disc(s, p))
 
 
+def _executed_plans(spark, fn) -> list[str]:
+    """The physical plans of the SQL executions ``fn()`` starts."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last() -> int:
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    bus.waitUntilEmpty()
+    first = last() + 1
+    fn()
+    bus.waitUntilEmpty()
+    runs = (store.execution(i) for i in range(first, last() + 1))
+    return [r.get().physicalPlanDescription() for r in runs if r.isDefined()]
+
+
 def test_exact_quantiles_no_global_sort_plan(spark):
-    """The refinement histogram must be a map-side-combined aggregation
-    (partial HashAggregate before the exchange), never a full Sort of
-    the data — the final TakeOrdered runs only over a bounded interval."""
-    from pyspark.sql import functions as F
+    """The plans exact_quantiles runs: the refinement histogram is
+    map-side combined (a partial HashAggregate before the final one), and
+    no plan range-partitions or globally sorts the data — the final
+    selection's window sorts only inside its hash partitions."""
+    import re
 
     li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
-    base = li.select(F.col("l_extendedprice").alias("__v")).where(
-        F.col("__v").isNotNull())
-    staged = base.select(
-        F.floor((F.col("__v")) / F.lit(1000.0)).cast("int").alias("b_0"))
-    hist = staged.select(F.expr("stack(1, 0, b_0) AS (j, b)")).where(
-        F.col("b").isNotNull()).groupBy("j", "b").count()
-    plan = hist._jdf.queryExecution().executedPlan().toString()
-    assert "Sort" not in plan
-    assert plan.count("HashAggregate") >= 2  # partial + final
+    plans = _executed_plans(spark, lambda: exact_quantiles(
+        li, "l_extendedprice", [0.25, 0.5, 0.99], n_buckets=64,
+        collect_threshold=10_000))
+    assert any("partial_count" in p and "partial_min" in p
+               and p.count("HashAggregate") >= 2 for p in plans)
+    assert any("row_number" in p for p in plans)
+    for p in plans:
+        assert "rangepartitioning" not in p.lower()
+        assert not re.search(r"\bSort \[[^\]]*\], true", p)
+
+
+def test_local_table_typed_literals_round_trip(spark):
+    """core/exprs.local_table ships driver values as one parsed VALUES
+    table: every value collects back equal and with its column's type —
+    strings needing escapes, longs past 2^53, NULLs."""
+    import datetime
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from cuml_spark.core.exprs import local_table
+
+    schema = T.StructType([
+        T.StructField("s", T.StringType()), T.StructField("l", T.LongType()),
+        T.StructField("i", T.IntegerType()), T.StructField("b", T.ByteType()),
+        T.StructField("d", T.DoubleType()), T.StructField("f", T.FloatType()),
+        T.StructField("dec", T.DecimalType(12, 3)),
+        T.StructField("bool", T.BooleanType()),
+        T.StructField("dt", T.DateType()), T.StructField("ts", T.TimestampType()),
+        T.StructField("bin", T.BinaryType()),
+    ])
+    rows = [
+        ("it's \\ `x` ünï", 2 ** 60 + 1, -7, -128, 0.1, 1.5, Decimal("-12.345"),
+         True, datetime.date(1999, 12, 31),
+         datetime.datetime(2020, 2, 29, 13, 45, 6, 789), bytearray(b"\x00\xff")),
+        (None,) * 11,
+    ]
+    out = local_table(spark, schema, rows)
+    assert [f.dataType for f in out.schema.fields] == [f.dataType for f in schema.fields]
+    assert sorted(map(tuple, out.collect()), key=repr) == sorted(rows, key=repr)
+
+
+def test_grouped_exact_quantiles_typed_keys(spark):
+    """Group keys of non-string types, NULL included, travel into the
+    intervals tables as typed literals and match their rows exactly."""
+    from cuml_spark.ops.quantiles import grouped_exact_quantiles
+
+    big = 2 ** 60
+    rows = ([(big, float(i)) for i in range(30)]
+            + [(big + 1, float(-i)) for i in range(25)]
+            + [(None, float(i % 7)) for i in range(20)])
+    df = spark.createDataFrame(rows, "g bigint, x double")
+    probs = [0.3, 0.5, 1.0]
+    got = {(r["g"], r["p"]): r["value"]
+           for r in grouped_exact_quantiles(
+               df, "x", probs, ["g"], n_buckets=4, collect_threshold=3,
+               max_passes=12).collect()}
+    assert got == _grouped_disc(rows, probs)
 
 
 def test_exact_quantiles_edge_straddling_value(spark):

@@ -278,10 +278,6 @@ def test_backfill_parts_scale_law(spark, tmpdir, monkeypatch):
     assert _backfill_parts(spark, str(tmpdir), "documents") == 2
     # missing source -> full parallelism (no size signal)
     assert _backfill_parts(spark, str(tmpdir), "nope") == para
-    # env override wins
-    monkeypatch.setenv("CUML_SPARK_STREAM_PARTS", "7")
-    assert _backfill_parts(spark, str(tmpdir), "documents") == 7
-    monkeypatch.delenv("CUML_SPARK_STREAM_PARTS")
     # the 32 MB law, pre-clamp: ceil(bytes / 32MB) capped at parallelism
     import cuml_spark.harness_streaming as hs
     import os as _os
